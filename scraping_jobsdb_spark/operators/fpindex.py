@@ -12,7 +12,16 @@ view — so admitting a new batch costs
   + one broadcast probe join into the index  — zero corpus-sized shuffles
   + append(batch fps) + O(delta + view) DF refresh
 
-independent of corpus size. This is the composition of the engine's txn
+independent of corpus size. In Spark jobs, one ``admit_stream_batch``
+runs 11 — fingerprint 1 (checkpointed once), probe 6 (see ``probe``),
+kept-id collect 1, map-only kept append 1, DF-view fold 2 — and a
+compacting ``maintain`` 1 more: the row-preserving compaction is one
+map-only rewrite, and the view's watermark then moves in a metadata-only
+commit. Each job costs a fixed driver round trip, so at batch sizes of a
+few hundred documents the job count, not the data, sets the batch
+latency.
+
+This is the composition of the engine's txn
 layer (`sources/txn.py`), incremental MV layer (`sources/mv.py`), and the
 winnowing dedup family (`operators/textops.py`) — the content-level,
 at-scale generalization of the reference's per-run "skip already-scraped
@@ -32,6 +41,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scraping_jobsdb_spark.operators.similarity import isin_ids
 from scraping_jobsdb_spark.operators.textops import (
     containment_verdict,
     winnowing_fingerprint_set,
@@ -230,10 +240,15 @@ class FingerprintIndex:
             exclude_self_ids=True,
             _fps_b=fps_b,
         ).localCheckpoint()
-        kept_ids = verdict.filter(F.col("kept")).select(self.id_col)
-        fps = fps_b.join(kept_ids, self.id_col, "left_semi")
+        # one small collect of the checkpointed verdict's kept ids, then a
+        # map-only filtered write (a semi-join against the verdict plans 4
+        # jobs)
+        kept = [
+            r[0]
+            for r in verdict.filter(F.col("kept")).select(self.id_col).collect()
+        ]
         TxnTable(self.spark, self.fps_path).stream_epoch_append(
-            fps, app_id, epoch_id
+            fps_b.filter(isin_ids(self.id_col, kept)), app_id, epoch_id
         )
         self._df_view.refresh()
         return verdict
@@ -246,15 +261,15 @@ class FingerprintIndex:
         probe's scan). Compaction is ROW-PRESERVING, so the DF view's next
         refresh skips it and keeps folding appends incrementally
         (``append_delta_files(skip_row_preserving=True)``) instead of
-        recomputing gram frequencies from the whole index. Returns the
-        compacted snapshot's file count, or None if under the threshold."""
+        recomputing gram frequencies from the whole index; the refresh
+        here only advances the view's watermark over the compact commit,
+        metadata-only. Cost: one map-only rewrite job when compacting, zero
+        jobs otherwise. Returns the compacted snapshot's file count, or
+        None if under the threshold."""
         n = TxnTable(self.spark, self.fps_path).maybe_compact(
             max_files=max_files
         )
         if n is not None:
-            # advance the DF view's watermark over the compact commit (a
-            # zero-delta fold — rows unchanged) so the probe's freshness
-            # guard keeps holding
             self._df_view.refresh()
         return n
 
@@ -272,17 +287,25 @@ class FingerprintIndex:
         self._require_fresh_df()
         return self._df_view.read().filter(F.col("df") > self.max_df).select("h")
 
+    def refresh(self) -> None:
+        """Fold any fps-table commits the DF view hasn't seen (O(delta),
+        metadata-only across compactions, no-op when already fresh).
+        add()/admit_stream_batch()/maintain() commit fingerprints and the
+        view refresh as two separate txns; a crash between them leaves the
+        view stale, and this is the public repair entry point — also called
+        automatically by ``_require_fresh_df``, so the next probe()/
+        stop_grams() repairs the index instead of raising forever."""
+        self._df_view.refresh()
+
     def _require_fresh_df(self) -> None:
         # The probe's stop-gram list must reflect every committed
-        # fingerprint or the pruned universes drift between batches.
+        # fingerprint or the pruned universes drift between batches. A
+        # stale view is an interrupted maintenance step, not an invariant
+        # violation: fold the pending delta now.
         applied = self._df_view.applied_source_version()
         current = TxnTable(self.spark, self.fps_path).version()
         if applied < current:
-            raise ValueError(
-                f"{self.df_path}: DF view at source version {applied} but "
-                f"fps table at {current}; call add()/refresh via the index "
-                "so the stop-gram view is maintained with the data"
-            )
+            self.refresh()
 
     # ---------------------------------------------------------------- probe
 
@@ -304,12 +327,17 @@ class FingerprintIndex:
         small next to a 100 TB corpus), so the probe join streams over the
         index scan map-side — the only shuffle moves matched (batch doc,
         corpus doc) pairs, never the index. The stop-gram list comes from
-        the maintained DF view (broadcast anti-join on both sides). Set
-        ``broadcast_batch=False`` for a backfill-sized batch; the planner
-        then picks the join strategy. ``exclude_self_ids`` drops corpus
-        fingerprints whose id appears in the batch itself before scoring
-        (a broadcast anti-join on the small batch-id set) — the
-        replay-stability guard ``admit_stream_batch`` relies on."""
+        the maintained DF view (a broadcast anti-join on the batch side
+        only). Set ``broadcast_batch=False`` for a backfill-sized batch;
+        the planner then picks the join strategies. ``exclude_self_ids``
+        drops corpus fingerprints whose id appears in the batch itself
+        before scoring (a broadcast anti-join on the small batch-id set) —
+        the replay-stability guard ``admit_stream_batch`` relies on.
+
+        Cost, in Spark jobs, with broadcast on and ``_fps_b`` supplied:
+        the stop-gram, batch-fingerprint and (with ``exclude_self_ids``)
+        batch-id broadcasts, then ``containment_verdict``'s one shuffle-map
+        job, its verdict broadcast and the action's own job — 6."""
         stop = F.broadcast(self.stop_grams())
         # ``_fps_b``: already-materialized batch fingerprints supplied by
         # admit_stream_batch (fingerprinted once, shared with the kept
@@ -324,19 +352,18 @@ class FingerprintIndex:
         pruned_b = fps_b.join(stop, "h", "left_anti")
         if _fps_b is None:
             pruned_b = pruned_b.localCheckpoint()
-        if broadcast_batch:
-            pruned_b = F.broadcast(pruned_b)
-        pruned_c = self.fingerprints().join(stop, "h", "left_anti")
+        # No stop-gram anti-join on the corpus side: pruned_b holds no stop
+        # gram, so the equi-join on h inside the verdict can never match one.
+        corpus = self.fingerprints()
         if exclude_self_ids:
-            pruned_c = pruned_c.join(
-                F.broadcast(batch.select(self.id_col).distinct()),
-                self.id_col,
-                "left_anti",
+            corpus = corpus.join(
+                F.broadcast(batch.select(self.id_col)), self.id_col, "left_anti"
             )
         return containment_verdict(
             batch.select(self.id_col),
             pruned_b,
-            pruned_c,
+            corpus,
             threshold_milli,
             self.id_col,
+            broadcast_batch=broadcast_batch,
         )

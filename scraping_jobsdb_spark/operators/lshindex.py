@@ -15,11 +15,19 @@ batch costs
   + one broadcast probe join into the index  — zero corpus-sized shuffles
   + append(batch sigs) + O(delta + view) bucket-size refresh
 
-independent of corpus size. Composition of the engine's txn layer
-(``sources/txn.py``), incremental MV layer (``sources/mv.py``), and the
-MinHash LSH family (``operators/similarity.py``) — the signature-level,
-at-scale generalization of the reference's per-run "skip already-scraped
-job ids" anti-join (``airflow/dags/scrape_url.py``, there by exact key).
+independent of corpus size. In Spark jobs, one ``admit_stream_batch``
+runs 11 — sign 1 (checkpointed once), probe 6 (see ``probe``), kept-id
+collect 1, map-only kept append 1, bucket-size fold 2 — and a compacting
+``maintain`` 1 more: the row-preserving compaction is one map-only
+rewrite, and the view's watermark then moves in a metadata-only commit.
+Each job costs a fixed driver round trip, so at batch sizes of a few
+hundred documents the job count, not the data, sets the batch latency.
+
+Composition of the engine's txn layer (``sources/txn.py``), incremental
+MV layer (``sources/mv.py``), and the MinHash LSH family
+(``operators/similarity.py``) — the signature-level, at-scale
+generalization of the reference's per-run "skip already-scraped job ids"
+anti-join (``airflow/dags/scrape_url.py``, there by exact key).
 
 Three hash families share the storage layout, selected at ``create``
 time and pinned in the manifest:
@@ -51,6 +59,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scraping_jobsdb_spark.operators.similarity import (
+    isin_ids,
     minhash_band_keys_portable,
     shingles_sql,
     simhash_fp_frame,
@@ -349,10 +358,16 @@ class LshSignatureIndex:
         verdict = self.probe(
             docs, text_col=text_col, exclude_self_ids=True, _sig_b=sig_b
         ).localCheckpoint()
-        kept_ids = verdict.filter(F.col("kept")).select(self.id_col)
-        sigs = sig_b.join(kept_ids, self.id_col, "left_semi")
+        # The checkpointed verdict holds one row per batch doc: collecting
+        # its kept ids is one small job, and the append then writes sig_b
+        # through a map-only filter (a semi-join against the verdict plans
+        # 4 jobs).
+        kept = [
+            r[0]
+            for r in verdict.filter(F.col("kept")).select(self.id_col).collect()
+        ]
         TxnTable(self.spark, self.sigs_path).stream_epoch_append(
-            sigs, app_id, epoch_id
+            sig_b.filter(isin_ids(self.id_col, kept)), app_id, epoch_id
         )
         self._bs_view.refresh()
         return verdict
@@ -363,8 +378,10 @@ class LshSignatureIndex:
         O(snapshot/max_files) rewrite cost). Compaction is ROW-PRESERVING,
         so the bucket-size view's next refresh skips it and keeps folding
         appends incrementally instead of recounting buckets from the
-        whole index. Returns the compacted snapshot's file count, or None
-        if under the threshold."""
+        whole index; the refresh here only advances the view's watermark
+        over the compact commit, metadata-only. Cost: one map-only rewrite
+        job when compacting, zero jobs otherwise. Returns the compacted
+        snapshot's file count, or None if under the threshold."""
         n = TxnTable(self.spark, self.sigs_path).maybe_compact(
             max_files=max_files
         )
@@ -441,12 +458,19 @@ class LshSignatureIndex:
         small next to a 100 TB corpus), so the probe join streams over
         the index scan map-side — the only shuffle moves matched (batch
         doc, corpus doc) pairs, never the index. The hot-bucket list
-        comes from the maintained bucket-size view (broadcast anti-join
-        on both sides). Set ``broadcast_batch=False`` for a
-        backfill-sized batch; the planner then picks the join strategy.
+        comes from the maintained bucket-size view (a broadcast anti-join
+        on the batch side only). The per-doc hit counts are batch-sized
+        and broadcast into the final join, so the batch ids never
+        shuffle. Set ``broadcast_batch=False`` for a backfill-sized
+        batch; the planner then picks both join strategies.
         ``exclude_self_ids`` drops corpus signatures whose id appears in
         the batch itself before scoring — the replay-stability guard
-        ``admit_stream_batch`` relies on."""
+        ``admit_stream_batch`` relies on.
+
+        Cost, in Spark jobs, with broadcast on and ``_sig_b`` supplied:
+        the hot-bucket, batch-signature and (with ``exclude_self_ids``)
+        batch-id broadcasts, one shuffle-map job for the hit counts, their
+        broadcast, and the action's own job — 6."""
         hot = F.broadcast(self.hot_buckets())
         # ``_sig_b``: already-materialized batch signatures supplied by
         # admit_stream_batch (signed once, shared with the kept append);
@@ -460,26 +484,31 @@ class LshSignatureIndex:
             pruned_b = pruned_b.localCheckpoint()
         if broadcast_batch:
             pruned_b = F.broadcast(pruned_b)
-        pruned_c = self.signatures().join(hot, ["band", "key"], "left_anti")
+        # No hot anti-join on the corpus side: pruned_b holds no hot key,
+        # so the (band, key) equi-join below can never match one.
+        corpus = self.signatures()
         if exclude_self_ids:
-            pruned_c = pruned_c.join(
-                F.broadcast(batch.select(self.id_col).distinct()),
-                self.id_col,
-                "left_anti",
+            corpus = corpus.join(
+                F.broadcast(batch.select(self.id_col)), self.id_col, "left_anti"
             )
+        # collect_set sizes, not countDistinct: two distinct counts plan as
+        # an Expand with two shuffles; the sets are candidate-sized per
+        # batch doc and aggregate map-side in ONE shuffle.
         hits = (
             pruned_b.join(
-                pruned_c.select(
+                corpus.select(
                     F.col(self.id_col).alias("__cid"), "band", "key"
                 ),
                 ["band", "key"],
             )
             .groupBy("__bid")
             .agg(
-                F.countDistinct("__cid").alias("n_cand"),
-                F.countDistinct("band").alias("n_bands_hit"),
+                F.size(F.collect_set("__cid")).cast("bigint").alias("n_cand"),
+                F.size(F.collect_set("band")).cast("bigint").alias("n_bands_hit"),
             )
         )
+        if broadcast_batch:
+            hits = F.broadcast(hits)
         return (
             batch.select(self.id_col)
             .join(hits, F.col(self.id_col) == F.col("__bid"), "left")

@@ -994,8 +994,9 @@ def incremental_containment_filter(
     same ``containment_verdict`` tail — bit-identical results. The probe is ONE equi-join on the gram
     hash between the (small) batch fingerprints and the pruned corpus
     index — LSH-banding economics, never all-pairs. Stop-grams (df >
-    ``max_df`` in the CORPUS) are dropped from both sides, and batch set
-    sizes are measured over the same pruned universe the join runs on.
+    ``max_df`` in the CORPUS) are dropped from the batch side, which
+    keeps them out of the join, and batch set sizes are measured over the
+    same pruned universe the join runs on.
     """
     # Checkpoint both fingerprint sets: each feeds multiple consumers below
     # and Catalyst would otherwise replay the per-character explode+window
@@ -1006,64 +1007,91 @@ def incremental_containment_filter(
     ).localCheckpoint()
     fps_b = winnowing_fingerprint_set(batch, k, w, text_col, id_col)
     # stop-grams: boilerplate hashes shared by > max_df CORPUS documents;
-    # both sides drop them (anti-join), so batch sizes and the probe join
-    # run over the same pruned universe. A gram absent from the corpus is
-    # kept on the batch side — it cannot match anything anyway.
+    # the batch side drops them (anti-join), so batch sizes and the probe
+    # join run over the same pruned universe — the corpus side needs no
+    # anti-join, since the probe cannot match a gram the batch dropped. A
+    # gram absent from the corpus is kept on the batch side — it cannot
+    # match anything anyway.
     stop = (
         fps_c.groupBy("h")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") > max_df)
         .select("h")
     )
-    pruned_c = fps_c.join(stop, "h", "left_anti")
     pruned_b = fps_b.join(stop, "h", "left_anti").localCheckpoint()
     return containment_verdict(
-        batch.select(id_col), pruned_b, pruned_c, threshold_milli, id_col
+        batch.select(id_col), pruned_b, fps_c, threshold_milli, id_col
     )
 
 
 def containment_verdict(
     batch_ids: DataFrame,
     pruned_b: DataFrame,
-    pruned_c: DataFrame,
+    corpus: DataFrame,
     threshold_milli: int,
     id_col: str,
+    broadcast_batch: bool = False,
 ) -> DataFrame:
     """The shared verdict tail of batch-vs-corpus containment dedup: given
-    the stop-gram-PRUNED fingerprint sets of the batch and the corpus
-    (``(id, h)`` rows over the same pruned universe), emit one row per batch
-    document — (id, n_fp, n_dup_of, kept). Used by both the self-contained
-    ``incremental_containment_filter`` and the persisted-index probe
-    (``operators/fpindex.py``), so the two paths cannot drift.
+    the stop-gram-PRUNED batch fingerprint set and the corpus fingerprint
+    set (``(id, h)`` rows), emit one row per batch document — (id, n_fp,
+    n_dup_of, kept). The corpus side needs no pruning of its own: the
+    equi-join on ``h`` can never match a gram the batch side dropped. Used
+    by both the self-contained ``incremental_containment_filter`` and the
+    persisted-index probe (``operators/fpindex.py``), so the two paths
+    cannot drift.
 
-    Shape: one equi-join on the gram hash (the probe), a pair-count
-    aggregate, an integer cross-multiplied threshold — never all-pairs.
-    When the batch side is broadcast-small the probe join is map-only over
-    the corpus index: zero corpus-sized shuffles."""
-    sizes_b = pruned_b.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_fp"))
-    shared = (
+    Shape: one equi-join on the gram hash (the probe), then ONE shuffle on
+    the batch doc id. The batch's own pruned rows ride the same shuffle as
+    the matched (batch doc, corpus doc) rows, so each doc's set size
+    ``n_fp`` and its per-candidate shared counts come out of two
+    aggregates over one partitioning (hash on the batch id satisfies both
+    groupings); an integer cross-multiplied threshold — never all-pairs.
+    The price is that matched rows shuffle before any map-side combine;
+    they are batch-sized × candidates, never corpus-sized.
+    ``broadcast_batch``: the batch side is broadcast-small, so hint it
+    into the probe join (zero corpus-sized shuffles) and broadcast the
+    per-doc counts into the final join (the batch ids never shuffle)."""
+    if broadcast_batch:
+        pruned_b = F.broadcast(pruned_b)
+    own = pruned_b.select(
+        F.col(id_col).alias("__bid"),
+        F.lit(None).cast(corpus.schema[id_col].dataType).alias("__cid"),
+        F.lit(False).alias("__pair"),
+    )
+    pairs = (
         pruned_b.select(F.col(id_col).alias("__bid"), "h")
-        .join(pruned_c.select(F.col(id_col).alias("__cid"), "h"), "h")
-        .groupBy("__bid", "__cid")
-        .agg(F.count(F.lit(1)).alias("shared_fp"))
+        .join(corpus.select(F.col(id_col).alias("__cid"), "h"), "h")
+        .select("__bid", "__cid", F.lit(True).alias("__pair"))
     )
-    dup_of = (
-        shared.join(
-            sizes_b.select(F.col(id_col).alias("__bid"), "n_fp"), "__bid"
-        )
-        .filter(F.col("shared_fp") * 1000 >= F.lit(threshold_milli) * F.col("n_fp"))
+    per_doc = (
+        own.unionByName(pairs)
+        .repartition("__bid")
+        .groupBy("__bid", "__pair", "__cid")
+        .agg(F.count(F.lit(1)).alias("__n"))
         .groupBy("__bid")
-        .agg(F.count(F.lit(1)).alias("n_dup_of"))
-    )
-    return (
-        batch_ids.join(sizes_b, id_col, "left")
-        .join(dup_of.withColumnRenamed("__bid", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_fp", F.lit(0)).cast("bigint").alias("n_fp"),
-            F.coalesce("n_dup_of", F.lit(0)).cast("bigint").alias("n_dup_of"),
-            (F.coalesce("n_dup_of", F.lit(0)) == 0).alias("kept"),
+        .agg(
+            F.sum(F.when(~F.col("__pair"), F.col("__n"))).alias("n_fp"),
+            F.collect_list(F.when(F.col("__pair"), F.col("__n"))).alias("__shared"),
         )
+        .select(
+            F.col("__bid").alias(id_col),
+            "n_fp",
+            F.size(
+                F.filter(
+                    "__shared",
+                    lambda s: s * 1000 >= F.lit(threshold_milli) * F.col("n_fp"),
+                )
+            ).alias("n_dup_of"),
+        )
+    )
+    if broadcast_batch:
+        per_doc = F.broadcast(per_doc)
+    return batch_ids.join(per_doc, id_col, "left").select(
+        id_col,
+        F.coalesce("n_fp", F.lit(0)).cast("bigint").alias("n_fp"),
+        F.coalesce("n_dup_of", F.lit(0)).cast("bigint").alias("n_dup_of"),
+        (F.coalesce("n_dup_of", F.lit(0)) == 0).alias("kept"),
     )
 
 

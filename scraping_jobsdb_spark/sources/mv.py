@@ -3,12 +3,22 @@
 The scale story: a 100 TB fact table's rollup must NOT be recomputed by
 rescanning the base on every refresh. For append-only commit ranges the
 delta files ARE the row delta (``append_delta_files``), so a refresh costs
-one partial aggregate over ONLY the new files plus a combine against the
-current view state (dimension-sized) — O(|delta| + |view|), independent of
-the base table's size. The view state itself lives in a txn table, and the
-last-applied source version rides each commit's manifest as ``meta``, so
-refresh is idempotent and crash-safe: a re-run of the same refresh sees the
-watermark already advanced and no-ops.
+O(|delta| + |view|), independent of the base table's size. The view state
+itself lives in a txn table, and the last-applied source version rides
+each commit's manifest as ``meta``, so refresh is idempotent and
+crash-safe: a re-run of the same refresh sees the watermark already
+advanced and no-ops.
+
+Cost model, in Spark jobs per call:
+
+- a fold (``refresh`` over appends, or ``fold``): 2 — the raw delta rows
+  are mapped to the state's shape (count -> 1, dsum -> DECIMAL(30,4)),
+  unioned with the state, and aggregated ONCE (one shuffle-map job), then
+  the new state is written (one job);
+- a refresh whose range holds no appends (only row-preserving compact/
+  zorder commits): 0 — the watermark rides a metadata-only ``set_meta``
+  commit over the view's existing files;
+- a refresh that is already current: 0, and no commit.
 
 This is the at-scale mapping of the reference's cron-recomputed summary
 tables (``airflow/dags/scrape_url.py`` re-runs its aggregation SQL over the
@@ -24,11 +34,13 @@ full recompute at the captured snapshot, then resumes incremental.
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from scraping_jobsdb_spark.sources.txn import (
     TxnTable,
@@ -92,7 +104,7 @@ class IncrementalAggView:
         return out
 
     def _combine_aggs(self) -> list:
-        # state ∪ partial re-aggregates: counts and sums add, min/max fold
+        # state ∪ state-shaped delta rows: counts and sums add, min/max fold
         out = []
         for name, (kind, _col) in self.measures.items():
             if kind in ("count", "sum", "dsum"):
@@ -105,6 +117,31 @@ class IncrementalAggView:
 
     def _partial(self, df: DataFrame) -> DataFrame:
         return df.groupBy(*self.group_cols).agg(*self._delta_aggs())
+
+    def _as_state(self, delta: DataFrame) -> DataFrame:
+        """Raw delta rows in the state's shape — each row is a one-row
+        partial aggregate (count -> 1, dsum -> its DECIMAL(30,4) value,
+        sum/min/max -> the value itself), so ``_combine_aggs`` over
+        state ∪ these rows folds the delta in ONE aggregate (one shuffle);
+        pre-aggregating the delta would add a second."""
+        cols = [F.col(c) for c in self.group_cols]
+        for name, (kind, col) in self.measures.items():
+            if kind == "count":
+                cols.append(F.lit(1).cast("bigint").alias(name))
+            elif kind == "dsum":
+                cols.append(F.col(col).cast("decimal(30,4)").alias(name))
+            else:
+                cols.append(F.col(col).alias(name))
+        return delta.select(*cols)
+
+    def _combine(self, delta: DataFrame) -> DataFrame:
+        """The current state with ``delta``'s raw rows folded in."""
+        return self._pin_types(
+            self.read()
+            .unionByName(self._as_state(delta))
+            .groupBy(*self.group_cols)
+            .agg(*self._combine_aggs())
+        )
 
     # dsum partials come out DECIMAL(40,4) (Spark widens SUM); pin the state
     # type so repeated combines can't keep widening the column
@@ -172,17 +209,11 @@ class IncrementalAggView:
         meta: dict[str, Any] = {}
         if epoch_id is not None:
             meta[_EPOCH_KEY] = int(epoch_id)
-        partial = self._pin_types(self._partial(delta))
         if not self.exists():
-            TxnTable.create(self.spark, self.view_path, partial, meta=meta)
+            state = self._pin_types(self._partial(delta))
+            TxnTable.create(self.spark, self.view_path, state, meta=meta)
             return True
-        merged = self._pin_types(
-            self.read()
-            .unionByName(partial)
-            .groupBy(*self.group_cols)
-            .agg(*self._combine_aggs())
-        )
-        self._view().overwrite(merged, meta=meta)
+        self._view().overwrite(self._combine(delta), meta=meta)
         return True
 
     def refresh(self) -> int:
@@ -215,27 +246,18 @@ class IncrementalAggView:
             self._view().overwrite(state, meta=meta)
             return target
         if not files:
-            self._view().overwrite(self.read(), meta=meta)
+            # only row-preserving rewrites in the range: the state is
+            # already exact, so advance the watermark without a data job
+            self._view().set_meta(meta)
             return target
         # schema straight from the manifest — building source.read(target)
         # just to take .schema costs a full DataSource resolution (~0.1 s
         # of driver time per refresh, measured r14)
-        import json as _json
-
-        from pyspark.sql.types import StructType as _StructType
-
-        schema = _StructType.fromJson(
-            _json.loads(source._manifest(target)["schema"])
+        schema = StructType.fromJson(
+            json.loads(source._manifest(target)["schema"])
         )
         delta = self.spark.read.schema(schema).parquet(
             *[os.path.join(self.source_path, f) for f in files]
         )
-        partial = self._partial(delta)
-        merged = self._pin_types(
-            self.read()
-            .unionByName(self._pin_types(partial))
-            .groupBy(*self.group_cols)
-            .agg(*self._combine_aggs())
-        )
-        self._view().overwrite(merged, meta=meta)
+        self._view().overwrite(self._combine(delta), meta=meta)
         return target

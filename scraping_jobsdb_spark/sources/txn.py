@@ -80,6 +80,18 @@ APPEND_OPS = frozenset(
 # reason as APPEND_OPS.
 ROW_PRESERVING_OPS = frozenset({"compact", "zorder"})
 
+# Manifest keys that describe a snapshot's FILES rather than one commit. A
+# metadata-only commit that re-references a snapshot's files (restore,
+# set_meta) carries them, or readers lose the skipping index or the bucket
+# layout — and without "dvs" a snapshot taken after delete_where_dv /
+# update_where_dv would silently resurrect MoR-deleted rows (e.g. GDPR
+# erasures) and double-count updated ones (old row + appended copy).
+_SNAPSHOT_KEYS = (
+    "stats_cols", "file_stats", "bucket",
+    "bloom_cols", "bloom_bits", "bloom_probes", "file_blooms",
+    "dvs",
+)
+
 
 def _jsonable(v):
     """Stat values as JSON-comparable scalars: numbers pass through, dates/
@@ -1477,25 +1489,34 @@ class TxnTable:
         and the botched history stays readable for forensics). This is the
         recover-from-bad-write primitive Delta ships as RESTORE. Returns
         the new current version."""
-        src = self._manifest(version)  # raises if the version doesn't exist
+        self._manifest(version)  # raises if the version doesn't exist
+        return self._recommit("restore", {"restored_from": version}, version)
+
+    def set_meta(self, meta: dict[str, Any]) -> int:
+        """Record ``meta`` (JSON-able, non-colliding keys) as a NEW commit
+        over the current snapshot's files — metadata-only, zero Spark jobs,
+        rows unchanged. The op ("set_meta") is in neither ``APPEND_OPS`` nor
+        ``ROW_PRESERVING_OPS``, so a delta-algebra consumer of this table
+        falls back to a snapshot read across it. The watermark-only commit
+        an incremental view makes when its source range held no appends.
+        Returns the new current version."""
+        return self._recommit("set_meta", dict(meta))
+
+    def _recommit(
+        self, op: str, extra: dict[str, Any], version: int | None = None
+    ) -> int:
+        """Commit snapshot ``version``'s files (default: the current
+        snapshot at commit time) unchanged under ``op``, carrying the
+        ``_SNAPSHOT_KEYS`` plus ``extra``."""
 
         def attempt(base):
-            extra: dict[str, Any] = {"restored_from": version}
-            # "dvs" MUST carry: a snapshot taken after delete_where_dv /
-            # update_where_dv references data files whose deleted rows exist
-            # only in the deletion-vector map — restoring the files without
-            # the map would silently resurrect MoR-deleted rows (e.g. GDPR
-            # erasures) and double-count updated ones (old row + appended copy).
-            for key in ("stats_cols", "file_stats", "bucket",
-                        "bloom_cols", "bloom_bits", "bloom_probes", "file_blooms",
-                        "dvs"):
-                if key in src:
-                    extra[key] = src[key]
+            src = self._manifest(base if version is None else version)
+            carried = {k: src[k] for k in _SNAPSHOT_KEYS if k in src}
             files = [os.path.join(self.path, f) for f in src["files"]]
             schema = StructType.fromJson(json.loads(src["schema"]))
             return (
-                files, schema, "restore", src.get("n_rows"),
-                base + 1, extra,
+                files, schema, op, src.get("n_rows"),
+                base + 1, {**carried, **extra},
             )
 
         return self._occ_loop(attempt)
@@ -2227,13 +2248,19 @@ class TxnTable:
         return deletes.unionByName(inserts)
 
     def compact(self, target_partitions: int | None = None) -> int:
-        """Rewrite the current snapshot into ``target_partitions`` files
-        (default: the session's shuffle parallelism) — the OPTIMIZE answer to
-        the small-file problem that per-commit appends accumulate: scans over
-        many tiny files pay per-file open/footer costs and defeat row-group
-        parallelism. Old versions keep reading their original files; vacuum
-        reclaims them once history is no longer needed. Returns the new file
-        count."""
+        """Rewrite the current snapshot into at most ``target_partitions``
+        files (default: the session's default parallelism) — the OPTIMIZE
+        answer to the small-file problem that per-commit appends
+        accumulate: scans over many tiny files pay per-file open/footer
+        costs and defeat row-group parallelism. Old versions keep reading
+        their original files; vacuum reclaims them once history is no
+        longer needed. Returns the new file count.
+
+        Cost: when the target is at most the snapshot's current file count
+        (the usual merge-many-into-few case) the rewrite is ONE map-only
+        job — a ``coalesce`` merges scan partitions without a shuffle. Only
+        a target above the current count (splitting few files into more)
+        pays a ``repartition`` shuffle, which is what spreads the rows."""
 
         def attempt(base):
             snapshot = self.read(base)
@@ -2246,7 +2273,12 @@ class TxnTable:
                 n_parts = target_partitions or max(
                     1, self.spark.sparkContext.defaultParallelism
                 )
-                compacted = snapshot.repartition(n_parts)
+                n_files = len(self._manifest(base)["files"])
+                compacted = (
+                    snapshot.coalesce(n_parts)
+                    if n_parts <= n_files
+                    else snapshot.repartition(n_parts)
+                )
             new_files, n = self._write_data(compacted, bucket=bucket)
             return (
                 new_files, snapshot.schema, "compact", n, len(new_files),

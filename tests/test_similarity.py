@@ -2042,3 +2042,34 @@ def test_exact_substring_spans_hash_prefilter_identical(spark):
         ).collect()
     )
     assert plain == fast and len(plain) == 64
+
+
+def test_isin_ids_equals_column_isin(spark):
+    """isin_ids (one parsed SQL IN list) keeps exactly the rows
+    Column.isin keeps: int ids, string ids with quotes and backslashes,
+    ids of another type (the Column fallback), and an empty list."""
+    import datetime
+
+    from scraping_jobsdb_spark.operators.similarity import isin_ids
+
+    ints = spark.range(20).withColumnRenamed("id", "k")
+    strs = spark.createDataFrame(
+        [("a",), ("o'neil",), ("back\\slash",), ("z",)], "k string"
+    )
+    dates = spark.createDataFrame(
+        [(datetime.date(2024, 1, d),) for d in (1, 2, 3)], "k date"
+    )
+    for df, values in (
+        (ints, [3, 7, 19, 99]),
+        (strs, ["o'neil", "back\\slash", "missing"]),
+        (dates, [datetime.date(2024, 1, 2)]),
+        (ints, []),
+    ):
+        got = sorted(r[0] for r in df.filter(isin_ids("k", values)).collect())
+        want = sorted(
+            r[0] for r in df.filter(F.col("k").isin(values)).collect()
+        ) if values else []
+        assert got == want
+    assert sorted(
+        r[0] for r in strs.filter(isin_ids("k", ["o'neil", "back\\slash"])).collect()
+    ) == ["back\\slash", "o'neil"]

@@ -824,6 +824,64 @@ def test_restore_carries_deletion_vectors(spark, tdir):
     assert not TxnTable(spark, tdir)._manifest().get("dvs")
 
 
+def test_set_meta_is_metadata_only_and_carries_snapshot_keys(spark, tdir):
+    """set_meta(meta) commits the current snapshot's files unchanged plus
+    ``meta``: no data file is written, every snapshot key restore()
+    carries (stats, blooms, deletion vectors) rides along, and the op is
+    neither an append nor row-preserving — a delta walk across it
+    refuses instead of guessing."""
+    from scraping_jobsdb_spark.sources.txn import (
+        APPEND_OPS,
+        ROW_PRESERVING_OPS,
+        _SNAPSHOT_KEYS,
+        append_delta_files,
+    )
+
+    t = TxnTable.create(
+        spark, tdir,
+        spark.range(0, 40).selectExpr("id AS k", "CAST(id AS DOUBLE) AS x").repartition(4),
+        stats_cols=["k"], bloom_cols=["k"],
+    )
+    assert t.delete_where_dv(F.col("k") < 10) == 10
+    before = t._manifest()
+    files_before = TxnTable._list_parquet(tdir)
+    v = t.set_meta({"mv_source_version": 7})
+    assert v == before["version"] + 1 == t.version()
+    m = t._manifest()
+    assert m["op"] == "set_meta" and m["mv_source_version"] == 7
+    assert m["files"] == before["files"]
+    for key in _SNAPSHOT_KEYS:
+        assert m.get(key) == before.get(key), key
+    assert m.get("dvs")
+    assert TxnTable._list_parquet(tdir) == files_before
+    assert t.read().count() == 30
+    assert "set_meta" not in APPEND_OPS | ROW_PRESERVING_OPS
+    with pytest.raises(ValueError, match="set_meta"):
+        append_delta_files(tdir, v - 1, v, skip_row_preserving=True)
+
+
+def test_compact_merging_files_runs_one_job(spark, tdir):
+    """Compacting into at most the current file count merges scan
+    partitions with a coalesce — one map-only write job, no shuffle —
+    and keeps the rows; a target above the count still repartitions."""
+    t = TxnTable.create(spark, tdir, _df(spark, [(0, "v0")]))
+    for i in range(1, 6):
+        t.append(_df(spark, [(i, f"v{i}")]))
+    want = _rows(t.read())
+    sc = spark.sparkContext
+    group = f"compact-{os.getpid()}-{t.version()}"
+    sc.setJobGroup(group, "compact")
+    try:
+        assert t.compact(target_partitions=2) <= 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert _rows(t.read()) == want
+    assert t.compact(target_partitions=4) >= 1
+    assert _rows(t.read()) == want
+
+
 def test_read_asof_timestamp_time_travel(spark, tdir):
     """Every commit records committed_at; read_asof(ts) reads the snapshot
     current at that wall-clock instant."""
