@@ -35,6 +35,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from scraping_jobsdb_spark.operators.checks import null_check, run_checks, unique_check
 from scraping_jobsdb_spark.operators.dedup import dedup_first
 from scraping_jobsdb_spark.operators.incremental import new_rows
+from scraping_jobsdb_spark.session import local_df
 
 Transport = Callable[[str], str]
 
@@ -50,13 +51,17 @@ def build_param_grid(
     keywords: list[str] | None = None,
     bands: list[tuple[int, int]] | None = None,
 ) -> DataFrame:
-    """The 88-combo fan-out as one DataFrame (kw × band)."""
+    """The 88-combo fan-out as one DataFrame (kw × band).
+
+    Built with ``local_df``: a JVM-side ``LocalRelation``, so reading the
+    grid costs no Python-worker stage (``createDataFrame(list)`` paid a
+    4-task Python-RDD stage per run just to read the rows)."""
     rows = [
         (kw, lo, hi)
         for kw in (keywords or DEFAULT_KEYWORDS)
         for lo, hi in (bands or DEFAULT_BANDS)
     ]
-    return spark.createDataFrame(rows, "keyword string, lo int, hi int")
+    return local_df(spark, rows, "keyword string, lo int, hi int")
 
 
 def fetch_html(

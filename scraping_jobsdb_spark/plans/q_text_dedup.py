@@ -198,10 +198,13 @@ def q_minhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs over documents with
     deterministically-injected near-dups (every 10th doc re-appended with its
     last word dropped). Non-SQL-expressible (seeded xxhash64 permutations) →
-    rows-only check; pair quality is asserted in tests/test_similarity.py."""
+    rows-only check; pair quality is asserted in tests/test_similarity.py.
+    No ``fan_out`` here: the operator fans its input out itself, and the
+    union still reports the table's files, so a plan-level call would
+    shuffle twice."""
     from scraping_jobsdb_spark.operators.similarity import minhash_candidate_pairs
 
-    docs = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     near = docs.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 10000).alias("doc_id"),
         F.regexp_replace("text", r"\s+\S+$", "").alias("text"),

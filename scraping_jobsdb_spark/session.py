@@ -93,22 +93,31 @@ def local_df(spark: SparkSession, rows, schema: str):
     Python-worker round trip PER PARTITION (measured ~130 ms each: a
     ``coalesce(1)`` over the default 32 slices of a 10-row frame stalled
     ~4 s computing 32 tiny Python partitions sequentially) even though the
-    data is bytes. Routing through pandas hands Spark ONE Arrow batch that
-    lives JVM-side from then on: the same frame coalesces, joins, or
-    writes in ~50 ms. Use this for every codebook-scale side frame
-    (centroids, codebooks, probe-pair lists); value fidelity is preserved
-    (int64 / float64 / lists of float64 cross Arrow exactly).
-    """
-    import pandas as pd
+    data is bytes. Handing Spark ONE Arrow table instead gives a
+    ``LocalRelation`` that lives JVM-side from then on: the same frame
+    coalesces, joins, or writes in ~50 ms. Use this for every
+    codebook-scale side frame (centroids, codebooks, probe-pair lists,
+    driver-solved components, parameter grids).
 
+    The table is built column by column, typed from ``schema`` — not
+    through pandas, whose inference turns an int64 column holding a None
+    into float64 (ids above 2^53 would round). Nulls stay nulls, values
+    cross exactly, and an empty row list is an empty ``LocalRelation``
+    rather than an empty Python RDD.
+    """
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
     st = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    asch = to_arrow_schema(st)
     rows = list(rows)
-    if not rows:
-        return spark.createDataFrame([], st)
-    pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields])
-    return spark.createDataFrame(pdf, st)
+    cols = list(zip(*rows)) if rows else [()] * len(asch)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, asch)], schema=asch
+    )
+    return spark.createDataFrame(table, st)
 
 
 def ship_package(spark: SparkSession) -> None:

@@ -120,6 +120,21 @@ def fan_out(
     group-by key), the one exchange does double duty and Catalyst skips the
     operator's own shuffle. Use round-robin (default) when downstream keys
     are low-cardinality (skew) or the map work is keyless.
+
+    Operators may call it on their own input (``minhash_candidate_pairs``
+    does, before signing). It repartitions ANY frame without file splits —
+    a ``localCheckpoint``, a driver-built frame, a post-shuffle result —
+    because such a frame's width is whatever AQE or the producer left, and
+    AQE coalesces a small shuffle (hundreds of KB) to one partition however
+    CPU-heavy the next stage is. Cost model: one more exchange of the
+    frame's rows (a map stage, run as its own job under AQE; select the
+    columns the next stage needs first) against a next stage that runs on
+    every core instead of one. Worth it before per-row CPU work such as
+    signing; not worth it on a per-batch path of ~100 rows, where the job
+    is the cost. The file probe reads the whole plan's leaves, so a frame
+    that already went through ``fan_out`` reports the same narrow scan and
+    would be repartitioned again: fan out once, at the operator that does
+    the CPU work.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     # Width probe: pure file metadata, never df.rdd — the RDD translation

@@ -851,6 +851,34 @@ def test_dedup_keep_best_argmax_and_ties(spark):
     assert 4 not in out
 
 
+def test_components_driver_side_frame_is_jvm_side(spark):
+    """The driver-solved components come back as a JVM-side
+    ``LocalRelation`` (no Python RDD for consumers to round-trip through),
+    with the rows the union-find produced: an empty graph gives an empty
+    frame, a null-id self-pair its own (null, null) component, and ids
+    above 2^53 stay exact beside that null."""
+    from scraping_jobsdb_spark.operators.graph import connected_components
+
+    big = 2**62 + 1
+    cases = [
+        (spark.range(0).selectExpr("id AS id_a", "id AS id_b"), []),
+        (
+            spark.createDataFrame(
+                [(1, 2), (2, 3), (10, 11), (big, big + 2), (None, None)],
+                "id_a bigint, id_b bigint",
+            ),
+            [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (big, big),
+             (big + 2, big), (None, None)],
+        ),
+    ]
+    for edges, want in cases:
+        cc = connected_components(edges)
+        plan = cc._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+        assert cc.schema.simpleString() == "struct<id:bigint,component:bigint>"
+        assert sorted(map(tuple, cc.collect()), key=str) == sorted(want, key=str)
+
+
 def test_hll_merge_law_and_accuracy(spark):
     from scraping_jobsdb_spark.operators.sketches import (
         hll_build,

@@ -7,12 +7,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 from scraping_jobsdb_spark.operators.similarity import (
     brute_force_topk,
     ivf_topk,
     minhash_candidate_pairs,
+    minhash_signature,
+    shingles,
     simhash_candidate_pairs,
 )
 from scraping_jobsdb_spark.sources.tables import load_table
@@ -39,6 +41,131 @@ def test_minhash_finds_injected_neardups(spark):
     # LSH is probabilistic per-pair but a one-word-dropped doc shares almost
     # all shingles: expect the vast majority of injected pairs recovered.
     assert len(found) >= int(0.8 * n_injected), (len(found), n_injected)
+
+
+def _minhash_pairs_column_dsl(df, id_col, text_col, k=32, bands=8, max_bucket=64):
+    """Reference for ``minhash_candidate_pairs``, built independently from
+    the Column-DSL ``shingles`` / ``minhash_signature`` builders: no
+    fan-out, buckets keyed by a (band, band_hash) struct, and the pair
+    expansion as nested lambdas."""
+    rows = k // bands
+    sig = df.select(
+        F.col(id_col).alias("doc"),
+        minhash_signature(shingles(text_col, 3), k).alias("sig"),
+    )
+    banded = sig.select(
+        "doc",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(*[sig.sig[b * rows + r] for r in range(rows)]).alias(
+                            "bhash"
+                        ),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bk"),
+    )
+    buckets = (
+        banded.groupBy("bk")
+        .agg(F.sort_array(F.collect_set("doc")).alias("docs"))
+        .filter((F.size("docs") > 1) & (F.size("docs") <= max_bucket))
+    )
+    pairs = buckets.select(
+        F.explode(
+            F.filter(
+                F.flatten(
+                    F.transform(
+                        "docs",
+                        lambda a: F.transform(
+                            "docs",
+                            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
+                        ),
+                    )
+                ),
+                lambda p: p.id_a < p.id_b,
+            )
+        ).alias("p")
+    )
+    return pairs.select("p.id_a", "p.id_b").distinct()
+
+
+def test_minhash_signature_seeds_each_permutation(spark):
+    """``minhash_signature`` entry i is the min over shingles of
+    xxhash64(i, xxhash64(shingle)) — the permutation the SQL-built
+    signature in ``minhash_candidate_pairs`` uses — not a per-position
+    seed."""
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")], "id int, text string"
+    )
+    sql = "array(" + ", ".join(
+        f"array_min(transform(transform(sh, s -> xxhash64(s)), h -> xxhash64({i}, h)))"
+        for i in range(4)
+    ) + ")"
+    r = df.select(shingles("text", 3).alias("sh")).select(
+        minhash_signature(F.col("sh"), 4).alias("dsl"), F.expr(sql).alias("sql")
+    ).first()
+    assert r.dsl == r.sql and len(set(r.dsl)) == 4
+
+
+def _exchanges_below(plan: str, marker: str) -> list[str]:
+    """Exchange lines in the subtree of the first plan node containing
+    ``marker`` (a node's children are the following lines indented deeper
+    than it)."""
+    lines = plan.splitlines()
+    top = next(i for i, line in enumerate(lines) if marker in line)
+    depth = lines[top].index("+-") if "+-" in lines[top] else 0
+    below = []
+    for line in lines[top + 1:]:
+        if "+-" not in line or line.index("+-") <= depth:
+            break
+        below.append(line)
+    return [line for line in below if "Exchange" in line]
+
+
+def test_minhash_fans_out_one_partition_input_once(spark):
+    """A one-partition ``localCheckpoint`` input (what AQE leaves after a
+    small exact-dedup shuffle) is round-robined exactly once, below the
+    signing projection, so signing runs on every core; the pairs equal the
+    un-fanned Column-DSL reference's."""
+    corpus, _ = _docs_with_neardups(spark)
+    one = corpus.coalesce(1).localCheckpoint()
+    assert one.rdd.getNumPartitions() == 1
+    pairs = minhash_candidate_pairs(one, "doc_id", "text", k=32, bands=8)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+    below = _exchanges_below(plan, "array_min(transform(")
+    assert below and "RoundRobinPartitioning" in below[0], plan
+    want = _minhash_pairs_column_dsl(one, "doc_id", "text")
+    got = sorted(map(tuple, pairs.collect()))
+    assert got == sorted(map(tuple, want.collect())) and got
+
+
+def test_minhash_wide_scan_is_not_fanned_out(spark, tmp_path):
+    """A scan with at least one split per core passes through untouched."""
+    corpus, _ = _docs_with_neardups(spark)
+    path = str(tmp_path / "wide")
+    n = spark.sparkContext.defaultParallelism
+    corpus.repartition(n).write.parquet(path)
+    wide = spark.read.parquet(path)
+    assert len(wide.inputFiles()) >= n
+    pairs = minhash_candidate_pairs(wide, "doc_id", "text", k=32, bands=8)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan, plan
+
+
+def test_minhash_registry_query_shuffles_raw_rows_once(spark):
+    """The registry query leaves the fan-out to the operator: its union
+    input still reports the table's files, so a second ``fan_out`` would
+    add a second round-robin exchange."""
+    from scraping_jobsdb_spark.plans.queries import REGISTRY
+
+    df = REGISTRY["minhash_neardup_pairs"].spark_fn(spark, SF_CORRECT)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 1, plan
 
 
 def test_simhash_neardups_low_hamming(spark):

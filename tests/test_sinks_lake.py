@@ -128,6 +128,20 @@ def test_custom_python_datasource_search_surface(spark):
     assert only.count() == total_jobs_for("data-engineer", 10000, 20000)
 
 
+def test_param_grid_plan_scans_no_python_rdd(spark):
+    """The ingest grid is a JVM-side ``LocalRelation``: reading it runs no
+    Python-worker stage. Rows keep the keyword-major order."""
+    from scraping_jobsdb_spark.pipelines.ingest import build_param_grid
+
+    grid = build_param_grid(spark, ["a", "b"], [(1, 2), (3, 4)])
+    plan = grid._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert grid.schema.simpleString() == "struct<keyword:string,lo:int,hi:int>"
+    assert [tuple(r) for r in grid.collect()] == [
+        ("a", 1, 2), ("a", 3, 4), ("b", 1, 2), ("b", 3, 4)
+    ]
+
+
 def test_datasource_equals_fetch_extract_path(spark):
     """The DataSource surface and the pipeline's fetch+regex path discover
     the same (keyword, band, job_id) memberships."""
