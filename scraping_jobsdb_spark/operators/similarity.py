@@ -132,9 +132,7 @@ def minhash_candidate_pairs(
     2,300-document ``dedup_corpus`` workload, 4 vCPUs: signing went from
     1 task to 4, the keep-best call that runs it lazily from 3.7 to 2.1 s
     (traced, seed 1), and the pass median from 6.1 to 4.4 s (10
-    interleaved pairs). Callers must not fan out themselves — a
-    repartitioned frame still reports its scan's files, so the exchange
-    would run twice.
+    interleaved pairs).
     """
     rows = k // bands
     # Materialize hashed shingles as a column: the k permutation transforms

@@ -199,9 +199,7 @@ def q_minhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically-injected near-dups (every 10th doc re-appended with its
     last word dropped). Non-SQL-expressible (seeded xxhash64 permutations) →
     rows-only check; pair quality is asserted in tests/test_similarity.py.
-    No ``fan_out`` here: the operator fans its input out itself, and the
-    union still reports the table's files, so a plan-level call would
-    shuffle twice."""
+    The operator fans its input out itself."""
     from scraping_jobsdb_spark.operators.similarity import minhash_candidate_pairs
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -131,12 +131,15 @@ def fan_out(
     columns the next stage needs first) against a next stage that runs on
     every core instead of one. Worth it before per-row CPU work such as
     signing; not worth it on a per-batch path of ~100 rows, where the job
-    is the cost. The file probe reads the whole plan's leaves, so a frame
-    that already went through ``fan_out`` reports the same narrow scan and
-    would be repartitioned again: fan out once, at the operator that does
-    the CPU work.
+    is the cost.
+
+    Idempotent: a frame that is already a round-robin shuffle to at least
+    ``target`` partitions (under projections and filters) passes through,
+    so a caller's ``fan_out`` and an operator's own never stack.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    if not cols and _shuffled_to(df, target):
+        return df
     # Width probe: pure file metadata, never df.rdd — the RDD translation
     # forces a second physical planning pass for every fan_out call, which
     # on a wide plan costs more than the question is worth. A scan over
@@ -148,6 +151,22 @@ def fan_out(
     if cols:
         return df.repartition(target, *cols)
     return df.repartition(target)
+
+
+def _shuffled_to(df: DataFrame, target: int) -> bool:
+    """True when ``df``'s logical plan, below any projections and filters
+    (narrow: they keep the partition count), is a shuffling repartition to
+    at least ``target`` partitions — e.g. an earlier ``fan_out``. The file
+    probe cannot tell: it reads the plan's leaves, which still report the
+    narrow scan."""
+    node = df._jdf.queryExecution().logical()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.child()
+    return (
+        node.nodeName() == "Repartition"
+        and node.shuffle()
+        and node.numPartitions() >= target
+    )
 
 
 def _parse_byte_size(s: str) -> int:

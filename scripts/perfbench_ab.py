@@ -7,8 +7,9 @@ working tree.
 The parent is exported with ``git archive`` into a scratch directory (its
 own checkout, so its ``.perfbench/`` state is its own); the change side is
 this checkout. Each seed is one pair: both sides run untraced with that
-seed, and the side that runs first alternates from pair to pair. CPU steal
-is read from ``/proc/stat`` around every run.
+seed, and the side that runs first alternates from pair to pair. The
+workloads, the run command and the run length come from
+``BENCHMARK.json``. CPU steal is read from ``/proc/stat`` around every run.
 
 Output: one line per pair (each side's end-to-end metrics and steal), then
 per metric the change's wins, both medians, the parent's quartiles, the
@@ -19,8 +20,9 @@ interquartile range. Every metric is flagged REGRESSION when its median
 worsens by more than its ``bound`` in ``BENCHMARK.json``, and UNRESOLVED
 when the parent's own spread (IQR / median) is wider than that bound and
 not every change run reads better than every parent run. The held-out seed
-is run as one more pair and reported on its own; it must confirm a claim. ``--json FILE`` also
-writes every run's record.
+is run as one more pair and reported on its own; it must confirm a claim,
+and a failed run on either side of it does not confirm. ``--json FILE``
+also writes every run's record.
 
 Default parent: ``HEAD`` when tracked files have uncommitted changes,
 else ``HEAD~1``. Exits 1 when the change fails more runs, or a larger
@@ -91,9 +93,11 @@ def steal_pct(before: list[int], after: list[int]) -> float:
     return 100.0 * d[7] / total if total else 0.0
 
 
-def run_side(checkout: str, workload: str, seed: int, seconds: float) -> dict:
-    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+def run_side(bench: dict, checkout: str, workload: str, seed: int) -> dict:
+    """One untraced run of ``bench["command"]`` in ``checkout``, for the
+    benchmark's ``run_seconds``."""
+    cmd = [*bench["command"], "--workload", workload, "--seed", str(seed),
+           "--seconds", str(bench["run_seconds"]), "--trace", "0"]
     before, t = cpu_times(), time.time()
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     rec = {"steal_pct": steal_pct(before, cpu_times()), "run_s": time.time() - t,
@@ -128,21 +132,21 @@ def fmt_side(tag: str, rec: dict, names: list[str]) -> str:
 
 
 def main() -> int:
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True,
-                    choices=["etl_daily", "dedup_corpus", "index_admission"])
+                    choices=[w["name"] for w in bench["workloads"]])
     ap.add_argument("--seeds", required=True, help="e.g. 101-110 or 1,2,5")
     ap.add_argument("--held-out", type=int, default=None)
     ap.add_argument("--parent", default=None, help="git revision")
-    ap.add_argument("--seconds", type=float, default=12)
     ap.add_argument("--claim", default=None, help="metric a gain is claimed on")
     ap.add_argument("--scratch", default=None,
                     help="directory for the parent checkout (default: a temp dir)")
     ap.add_argument("--json", default=None, help="write every run's record here")
     args = ap.parse_args()
 
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        spec = {m["name"]: m for m in json.load(fh)["end_to_end"]}
+    spec = {m["name"]: m for m in bench["end_to_end"]}
     names = list(spec)
     rev = args.parent or default_parent()
     scratch = args.scratch or tempfile.mkdtemp(prefix="perfbench-ab-")
@@ -156,8 +160,8 @@ def main() -> int:
     pairs = []
     for i, (seed, held) in enumerate(plan):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        recs = {side: run_side(parent if side == "parent" else ROOT, args.workload,
-                               seed, args.seconds) for side in order}
+        recs = {side: run_side(bench, parent if side == "parent" else ROOT,
+                               args.workload, seed) for side in order}
         pairs.append({"seed": seed, "held_out": held, "first": order[0], **recs})
         print(f"s{seed}{' held-out' if held else ''} {order[0]}-first  "
               f"{fmt_side('P', recs['parent'], names)}  "
@@ -219,12 +223,19 @@ def verdict(pairs: list[dict], spec: dict, claim: str | None) -> bool:
             line += "  GAIN" if gain else "  NO GAIN"
             ok = ok and gain
             for p in pairs:
-                if p["held_out"] and name in p["change"]["metrics"]:
-                    pv, cv = p["parent"]["metrics"][name], p["change"]["metrics"][name]
+                if not p["held_out"]:
+                    continue
+                pv = p["parent"]["metrics"].get(name)
+                cv = p["change"]["metrics"].get(name)
+                if pv is None or cv is None:
+                    # a failed run on either side leaves nothing to confirm
+                    won = False
+                    line += f"; held-out s{p['seed']} incomplete"
+                else:
                     won = cv < pv if lower else cv > pv
-                    line += (f"; held-out s{p['seed']} {pv:.4g} -> {cv:.4g} "
-                             f"{'confirms' if won else 'does not confirm'}")
-                    ok = ok and won
+                    line += f"; held-out s{p['seed']} {pv:.4g} -> {cv:.4g}"
+                line += " confirms" if won else " does not confirm"
+                ok = ok and won
         print(line)
     return ok
 

@@ -157,10 +157,26 @@ def test_minhash_wide_scan_is_not_fanned_out(spark, tmp_path):
     assert "RoundRobinPartitioning" not in plan, plan
 
 
+def test_fan_out_is_idempotent(spark):
+    """A frame already fanned out (under projections and filters) passes
+    through ``fan_out`` unchanged, so a caller's fan-out and the
+    operator's own plan one round-robin exchange, not two; a hash
+    ``cols`` request still repartitions."""
+    from scraping_jobsdb_spark.sources.tables import fan_out
+
+    corpus, _ = _docs_with_neardups(spark)
+    once = fan_out(corpus.coalesce(1).localCheckpoint())
+    narrowed = once.select("doc_id", "text").filter("doc_id >= 0")
+    assert fan_out(narrowed) is narrowed
+    assert fan_out(once, cols=["doc_id"]) is not once
+    pairs = minhash_candidate_pairs(narrowed, "doc_id", "text", k=32, bands=8)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+
+
 def test_minhash_registry_query_shuffles_raw_rows_once(spark):
-    """The registry query leaves the fan-out to the operator: its union
-    input still reports the table's files, so a second ``fan_out`` would
-    add a second round-robin exchange."""
+    """The registry query's plan holds one round-robin exchange: the
+    operator's fan-out of its (id, text) input."""
     from scraping_jobsdb_spark.plans.queries import REGISTRY
 
     df = REGISTRY["minhash_neardup_pairs"].spark_fn(spark, SF_CORRECT)
