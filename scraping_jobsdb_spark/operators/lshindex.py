@@ -59,9 +59,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scraping_jobsdb_spark.operators.similarity import (
+    _xxhash_signatures,
     isin_ids,
     minhash_band_keys_portable,
-    shingles_sql,
     simhash_fp_frame,
 )
 from scraping_jobsdb_spark.sources.mv import IncrementalAggView
@@ -146,30 +146,13 @@ def minhash_band_keys_fast(
     if k % bands:
         raise ValueError(f"bands ({bands}) must divide k ({k})")
     rows = k // bands
-    # SQL-string construction (see minhash_band_keys_portable): identical
-    # expressions, one parse instead of k lambda round-trips
-    hashed = df.select(
-        F.col(id_col).alias("doc"),
-        F.expr(
-            f"transform({shingles_sql(text_col, shingle_n)}, "
-            "s -> xxhash64(s))"
-        ).alias("__sh"),
-    )
-    sig = (
-        "array("
-        + ", ".join(
-            f"array_min(transform(__sh, h -> xxhash64({i}, h)))"
-            for i in range(k)
-        )
-        + ")"
-    )
     bks = ", ".join(
         f"struct({b} as band, concat_ws(',', "
         + ", ".join(f"__sig[{b * rows + r}]" for r in range(rows))
         + ") as key)"
         for b in range(bands)
     )
-    return hashed.select("doc", F.expr(sig).alias("__sig")).select(
+    return _xxhash_signatures(df, id_col, text_col, k, shingle_n).select(
         F.col("doc").alias(id_col), F.expr(f"inline(array({bks}))")
     )
 

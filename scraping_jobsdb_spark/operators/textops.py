@@ -6,10 +6,12 @@ The reference's only text processing is the BeautifulSoup extraction UDF
 (``spark/lib/utils.py:10-125``); these operators generalize that single
 document column into the text-pipeline toolkit an LLM-data engine needs.
 
-Everything here is built-in-function only (no Python UDFs): tokenization is
-``split``, counting is higher-order array functions, hashing is xxhash64/md5 —
-all whole-stage-codegen'd JVM expressions that scale linearly with no shuffle
-(per-row map work) until an aggregation is requested.
+The scoring scalars are built-in-function only (no Python UDFs): tokenization
+is ``split``, counting is higher-order array functions, hashing is
+xxhash64/md5 — JVM expressions that scale linearly with no shuffle (per-row
+map work) until an aggregation is requested. Higher-order functions are
+interpreted per element, outside whole-stage codegen, so a per-row value a
+lambda reads is bound once first (see ``quality_score``).
 """
 
 from __future__ import annotations
@@ -122,16 +124,19 @@ def stopword_ratio(col: Column | str, stopwords: tuple[str, ...] = _EN_STOPWORDS
 
 
 def alpha_ratio(col: Column | str) -> Column:
-    """Fraction of characters that are a-z/A-Z or space (junk detector)."""
+    """Fraction of characters that are a-z/A-Z or space (junk detector).
+    NULL for empty text: ``try_divide``, since under ANSI mode (Spark 4's
+    default) a plain ``/`` by a zero length aborts the whole job."""
     c = F.col(col) if isinstance(col, str) else col
     clean = F.length(F.regexp_replace(c, r"[^A-Za-z ]", ""))
-    return clean / F.length(c)
+    return F.try_divide(clean, F.length(c))
 
 
 def quality_score(col: Column | str) -> Column:
     """Composite quality heuristic in [0,1]: length band + stopword presence
     + alphabetic purity. Mirrors the length/punct/stopword-ratio family of
     pretraining quality filters; fixed weights keep it deterministic.
+    Empty text scores NULL (``alpha_ratio``), as in the DuckDB oracle.
 
     Built as ONE parsed SQL expression when given a column NAME (every
     engine call site does): the Column-DSL form cost ~0.5 s of py4j
@@ -139,31 +144,47 @@ def quality_score(col: Column | str) -> Column:
     constructed by six query families. `if(cond, x, y)` replays
     `when/otherwise` exactly (a NULL condition takes the else branch),
     the `D` suffixes pin the same double literals, and int/int `/` maps
-    to the same Divide — values are bit-identical (hash-oracled)."""
+    to the same Divide (``try_divide`` is that Divide returning NULL on a
+    zero divisor) — values are bit-identical (hash-oracled).
+
+    Cost model: the token array and the stop-word ratio are each bound
+    once, as the single element of an outer ``transform(array(v), ...)``
+    (see ``similarity.shingles_sql``), where written out they were
+    evaluated up to 4 and 2 times per row. The first two terms are
+    summed inside the binding and the alpha term added outside it, the
+    same left-to-right order as before, so values stay bit-identical.
+    Measured: 20,000 sf0.1 documents in one partition, one session, 8
+    interleaved reps: 1.64 → 1.46 s median, faster in all 8."""
     if not isinstance(col, str):
-        n_tok = token_count(col)
-        length_ok = F.when(
-            (n_tok >= 10) & (n_tok <= 100000), F.lit(1.0)
-        ).otherwise(F.lit(0.0))
-        stop = stopword_ratio(col)
-        stop_ok = F.when((stop >= 0.01) & (stop <= 0.6), F.lit(1.0)).otherwise(
-            F.lit(0.0)
-        )
-        return (
-            0.4 * length_ok + 0.3 * stop_ok + 0.3 * alpha_ratio(col)
-        ).cast("double")
+        def with_tokens(t: Column) -> Column:
+            n_tok = F.size(t)
+            length_ok = F.when(
+                (n_tok >= 10) & (n_tok <= 100000), F.lit(1.0)
+            ).otherwise(F.lit(0.0))
+            n_stop = F.size(F.filter(t, lambda x: F.lower(x).isin(*_EN_STOPWORDS)))
+
+            def with_ratio(stop: Column) -> Column:
+                stop_ok = F.when(
+                    (stop >= 0.01) & (stop <= 0.6), F.lit(1.0)
+                ).otherwise(F.lit(0.0))
+                return 0.4 * length_ok + 0.3 * stop_ok
+
+            return F.transform(F.array(n_stop / n_tok), with_ratio)[0]
+
+        head = F.transform(F.array(tokens(col)), with_tokens)[0]
+        return (head + 0.3 * alpha_ratio(col)).cast("double")
     c = f"`{col}`"
-    t = f"split(trim({c}), '\\\\s+')"
     stops = ", ".join(f"'{w}'" for w in _EN_STOPWORDS)
-    stop_ratio = (
-        f"(size(filter({t}, x -> lower(x) in ({stops}))) / size({t}))"
+    head = (
+        f"transform(array(split(trim({c}), '\\\\s+')), t -> "
+        f"transform(array(size(filter(t, x -> lower(x) in ({stops})))"
+        " / size(t)), r -> "
+        "0.4D * if(size(t) >= 10 and size(t) <= 100000, 1.0D, 0.0D)"
+        " + 0.3D * if(r >= 0.01D and r <= 0.6D, 1.0D, 0.0D))[0])[0]"
     )
     return F.expr(
-        f"cast(0.4D * if(size({t}) >= 10 and size({t}) <= 100000, 1.0D, 0.0D)"
-        f" + 0.3D * if({stop_ratio} >= 0.01D and {stop_ratio} <= 0.6D,"
-        " 1.0D, 0.0D)"
-        f" + 0.3D * (length(regexp_replace({c}, '[^A-Za-z ]', ''))"
-        f" / length({c})) as double)"
+        f"cast({head} + 0.3D * try_divide(length(regexp_replace({c}, "
+        f"'[^A-Za-z ]', '')), length({c})) as double)"
     )
 
 

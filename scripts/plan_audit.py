@@ -15,6 +15,10 @@ annotation; the no-row-Python invariant is the codegen proxy that matters):
 - ``products``    — CartesianProduct / BroadcastNestedLoopJoin occurrences
                     (quadratic joins; only acceptable vs literal-bounded sides)
 - ``pushed``      — whether the scan line advertises PushedFilters
+- ``lambda_invariants`` — row-level ``split``/``regexp_*`` calls inside a
+                    lambda body of the optimized plan, each re-run once
+                    per array element (``planlint.lambda_invariants``,
+                    the detector ``tests/test_similarity.py`` pins)
 
 The table is a point-in-time artifact regenerated by running this script;
 plan REGRESSION enforcement lives in tests/test_plan_quality.py (pins fail
@@ -34,6 +38,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def audit() -> str:
+    from scraping_jobsdb_spark.planlint import lambda_invariants
     from scraping_jobsdb_spark.plans.queries import REGISTRY
     from scraping_jobsdb_spark.session import get_spark
 
@@ -47,11 +52,12 @@ def audit() -> str:
         try:
             df = REGISTRY[name].spark_fn(spark, SF_DIR)
             plan = df._jdf.queryExecution().executedPlan().toString()
+            invariants = len(lambda_invariants(df))
         except Exception as e:  # pragma: no cover - audit must not abort
             # sanitize: '|' or newlines in the message would corrupt the
             # markdown table layout in PLANS.md
             msg = " ".join(str(e).split()).replace("|", "/")[:60]
-            rows.append((name, "ERR", msg, "", "", ""))
+            rows.append((name, "ERR", msg, "", "", "", ""))
             continue
         # Queries that eagerly materialize intermediates during build
         # (localCheckpoint/checkpoint) read them back as RDD scans: their
@@ -71,6 +77,7 @@ def audit() -> str:
                 plan.count("CartesianProduct")
                 + plan.count("BroadcastNestedLoopJoin"),
                 "yes" if re.search(r"PushedFilters: \[[^\]]", plan) else "-",
+                invariants,
             )
         )
 
@@ -80,24 +87,28 @@ def audit() -> str:
         f"Generated by `scripts/plan_audit.py` at `{SF_DIR}`. Markers per",
         "query: shuffle exchanges, Arrow-vectorized Python stages,",
         "row-at-a-time Python stages (must be 0), quadratic",
-        "join operators, and whether the scan advertises pushed filters.",
+        "join operators, whether the scan advertises pushed filters, and",
+        "row-level split/regexp calls that a lambda body re-runs per",
+        "element (`lambda_invariants`, should be 0).",
         "Regression enforcement is in `tests/test_plan_quality.py`; this is",
         "the human-readable sweep.",
         "",
-        "| query | exchanges | arrow_py | row_py | products | pushed |",
-        "|---|---|---|---|---|---|",
+        "| query | exchanges | arrow_py | row_py | products | pushed "
+        "| lambda_invariants |",
+        "|---|---|---|---|---|---|---|",
     ]
     for r in rows:
         lines.append("| " + " | ".join(str(x) for x in r) + " |")
     ok = [r for r in rows if r[1] != "ERR"]
     total_row_py = sum(r[3] for r in ok)
     total_products = sum(r[4] for r in ok)
+    total_invariants = sum(r[6] for r in ok)
     lines += [
         "",
         f"**Summary:** {len(ok)} queries audited; row-at-a-time Python "
         f"stages: {total_row_py}; quadratic join operators: {total_products} "
         "(each remaining one is a literal-bounded side — see the per-query "
-        "docstrings).",
+        f"docstrings); lambda-invariant row-level calls: {total_invariants}.",
         "",
         "**† = checkpoint-truncated plan**: the query materializes",
         "intermediates eagerly while building (localCheckpoint /",

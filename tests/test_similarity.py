@@ -2216,3 +2216,157 @@ def test_isin_ids_equals_column_isin(spark):
     assert sorted(
         r[0] for r in strs.filter(isin_ids("k", ["o'neil", "back\\slash"])).collect()
     ) == ["back\\slash", "o'neil"]
+
+
+# texts covering every shingling edge case: NULL, empty, whitespace-only,
+# fewer tokens than n, tabs and newlines (Spark's trim strips only spaces,
+# so a leading tab survives as an empty first token), repeats
+_SHINGLE_CASES = [
+    None,
+    "",
+    "   ",
+    "one",
+    "two words",
+    "\tlead tab",
+    "a\tb\nc  d\r\ne ",
+    "the cat the cat the cat sat",
+    "the quick brown fox jumps over the lazy dog",
+]
+
+
+def _shingles_ref(text, n):
+    """Pure-Python shingle set with Spark's semantics: trim spaces, split
+    on ``\\s+`` keeping empty tokens, slices from every start up to
+    ``max(len - n, 0)``, first occurrence kept. NULL text shingles like
+    the empty text: its token count is NULL, which ``greatest`` skips, and
+    ``concat_ws`` of the NULL slice is ''."""
+    import re
+
+    if text is None:
+        return [""]
+    toks = re.split(r"\s+", text.strip(" "))
+    grams = (" ".join(toks[i:i + n]) for i in range(max(len(toks) - n, 0) + 1))
+    return list(dict.fromkeys(grams))
+
+
+def test_shingles_and_ngram_jaccard_equal_python_reference(spark):
+    """``shingles``, ``shingles_sql`` and ``ngram_jaccard`` equal the
+    Python reference on the edge cases, n = 1 and n = 3."""
+    from scraping_jobsdb_spark.operators.similarity import (
+        ngram_jaccard,
+        shingles_sql,
+    )
+
+    df = spark.createDataFrame([(t,) for t in _SHINGLE_CASES], "text string")
+    pairs = spark.createDataFrame(
+        [(a, b) for a in _SHINGLE_CASES for b in _SHINGLE_CASES],
+        "ta string, tb string",
+    )
+    for n in (1, 3):
+        got = df.select(
+            "text",
+            shingles(F.col("text"), n).alias("dsl"),
+            F.expr(shingles_sql("text", n)).alias("sql"),
+        ).collect()
+        assert len(got) == len(_SHINGLE_CASES)
+        for r in got:
+            want = _shingles_ref(r.text, n)
+            assert r.dsl == want and r.sql == want, (r.text, n, r.dsl, r.sql)
+        jac = pairs.select(
+            "ta", "tb", ngram_jaccard(None, None, None, "ta", "tb", n).alias("j")
+        ).collect()
+        assert len(jac) == len(_SHINGLE_CASES) ** 2
+        for r in jac:
+            a, b = _shingles_ref(r.ta, n), _shingles_ref(r.tb, n)
+            want = len(set(a) & set(b)) / len(set(a) | set(b))
+            assert r.j == want, (r.ta, r.tb, n, r.j, want)
+
+
+def test_lambda_invariants_detector(spark):
+    """The detector lists a row-level split or regexp call inside a lambda
+    body, and passes per-element calls on a lambda variable and calls
+    outside any lambda."""
+    from scraping_jobsdb_spark.planlint import lambda_invariants
+
+    df = spark.createDataFrame([("a=1,b=2",)], "text string")
+    assert lambda_invariants(df.select(F.expr(
+        "transform(sequence(1, 3), i -> size(split(text, ',')) + i)"
+    ))) == ["StringSplit(text)"]
+    assert lambda_invariants(df.select(F.expr(
+        "filter(split(text, ','), kv -> regexp_replace(text, 'a', '') = kv)"
+    ))) == ["RegExpReplace(text)"]
+    assert lambda_invariants(df.select(
+        F.expr("transform(split(text, ','), kv -> split(kv, '=')[0])"),
+        F.expr("size(split(regexp_replace(text, '=', ''), ','))"),
+    )) == []
+
+
+def test_signing_paths_split_each_text_once(spark):
+    """No lambda body in the MinHash signing paths or the Jaccard verify
+    splits a row's text: the token array is bound once per row. With the
+    split inside the per-shingle lambda every text was regex-split once
+    per shingle."""
+    from scraping_jobsdb_spark.operators.lshindex import minhash_band_keys_fast
+    from scraping_jobsdb_spark.operators.similarity import (
+        minhash_band_keys_portable,
+        ngram_jaccard,
+    )
+    from scraping_jobsdb_spark.planlint import lambda_invariants
+
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(_SHINGLE_CASES)], "id long, text string"
+    )
+    pairs = spark.createDataFrame([("a b c d", "a b c e")], "ta string, tb string")
+    plans = {
+        "minhash_candidate_pairs": minhash_candidate_pairs(docs, "id", "text"),
+        "minhash_band_keys_fast": minhash_band_keys_fast(docs, "id", "text"),
+        "minhash_band_keys_portable": minhash_band_keys_portable(docs, "id", "text"),
+        "ngram_jaccard": pairs.select(
+            ngram_jaccard(None, None, None, "ta", "tb", 3).alias("j")
+        ),
+    }
+    for name, df in plans.items():
+        assert lambda_invariants(df) == [], name
+
+
+def test_quality_score_empty_text_is_null(spark):
+    """Empty text scores NULL instead of aborting the job with
+    DIVIDE_BY_ZERO under ANSI mode (the DuckDB oracle also returns NULL),
+    in both the SQL-string and the Column-DSL form; every other text
+    scores exactly what the unbound, written-out expression scores."""
+    from scraping_jobsdb_spark.operators.textops import alpha_ratio, quality_score
+
+    texts = [None, "", "   ", "x", "the cat and a dog", "12 3 !!"] + [
+        r.text
+        for r in load_table(spark, SF_SMOKE, "documents")
+        .select("text").limit(200).collect()
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    stops = "'the', 'a', 'an', 'of', 'and', 'or', 'is', 'to', 'in'"
+    t = "split(trim(text), '\\\\s+')"
+    ratio = f"(size(filter({t}, x -> lower(x) in ({stops}))) / size({t}))"
+    written_out = (
+        f"cast(0.4D * if(size({t}) >= 10 and size({t}) <= 100000, 1.0D, 0.0D)"
+        f" + 0.3D * if({ratio} >= 0.01D and {ratio} <= 0.6D, 1.0D, 0.0D)"
+        " + 0.3D * (length(regexp_replace(text, '[^A-Za-z ]', ''))"
+        " / length(text)) as double)"
+    )
+    rows = df.select(
+        "text",
+        quality_score("text").alias("sql"),
+        quality_score(F.col("text")).alias("dsl"),
+        alpha_ratio("text").alias("alpha"),
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        if not r.text:
+            assert r.sql is None and r.dsl is None and r.alpha is None, r
+    nonempty = df.filter("length(text) > 0")
+    got = nonempty.select(
+        "text", quality_score("text").alias("sql"),
+        quality_score(F.col("text")).alias("dsl"),
+        F.expr(written_out).alias("ref"),
+    ).collect()
+    assert len(got) == len([x for x in texts if x])
+    for r in got:
+        assert r.sql == r.dsl == r.ref and r.ref is not None, r
