@@ -71,7 +71,7 @@ __all__ = [
 def shingles(col: Column | str, n: int = 3) -> Column:
     """Word n-gram shingle set (distinct) of a text column, via a sequence of
     token-slices — pure JVM array ops. Column-DSL twin of ``shingles_sql``
-    (same expressions, same token-array binding)."""
+    (same expressions, same token-array binding, NULL for NULL text)."""
     c = F.col(col) if isinstance(col, str) else col
 
     def over(toks: Column) -> Column:
@@ -80,7 +80,9 @@ def shingles(col: Column | str, n: int = 3) -> Column:
             F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
         )
 
-    return F.transform(F.array(F.split(F.trim(c), r"\s+")), over)[0]
+    return F.when(
+        c.isNotNull(), F.transform(F.array(F.split(F.trim(c), r"\s+")), over)[0]
+    )
 
 
 def shingles_sql(col_name: str, n: int = 3) -> str:
@@ -98,15 +100,21 @@ def shingles_sql(col_name: str, n: int = 3) -> str:
     read ``t``. Traced on the 2,100-document ``dedup_corpus`` pass (4
     vCPUs, seed 1): ``spark.cpu_ms`` 3,020 → 1,339, and the keep-best
     call that runs signing and verification lazily 1.97 → 1.31 s. The
-    body and its input are unchanged, so the shingle sets are identical —
-    a NULL text still shingles like the empty text, to ``['']`` (``size``
-    of the NULL token array is NULL, which ``greatest`` skips).
+    body and its input are unchanged, so the shingle sets are identical.
     ``planlint.lambda_invariants`` finds a split that moves back into the
-    lambda."""
+    lambda.
+
+    A NULL text has NULL shingles; an empty or blank text shingles to
+    ``['']``. Without the NULL guard a NULL text shingled like the empty
+    one (``size`` of the NULL token array is NULL, which ``greatest``
+    skips, and ``concat_ws`` of the NULL slice is ''), so NULL and empty
+    documents signed alike, shared every LSH bucket and verified as
+    duplicates of each other."""
     return (
+        f"IF(`{col_name}` IS NULL, NULL, "
         f"transform(array(split(trim(`{col_name}`), '\\\\s+')), t -> "
         f"array_distinct(transform(sequence(0, greatest(size(t) - {n}, 0)), "
-        f"i -> concat_ws(' ', slice(t, i + 1, {n})))))[0]"
+        f"i -> concat_ws(' ', slice(t, i + 1, {n})))))[0])"
     )
 
 
@@ -187,8 +195,9 @@ def _xxhash_signatures(
     column; the k permutations then re-hash that fixed 8-byte value
     (``xxhash64(i, h)``) instead of the strings. SQL-string construction
     (see minhash_band_keys_portable): identical expressions, one parse
-    instead of k lambda round-trips."""
-    hashed = df.select(
+    instead of k lambda round-trips. A NULL text has no shingles and
+    gets no signature row, so it is never a candidate."""
+    hashed = df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc"),
         F.expr(
             f"transform({shingles_sql(text_col, shingle_n)}, "
@@ -402,10 +411,13 @@ def ngram_jaccard(
     Each set is written twice, for the intersection and the union.
     Binding the pair once in an outer ``transform`` measured no faster
     (20,000 sf0.1 text pairs, one session, 5 reps: 5.50 s bound, 5.38 s
-    as written; the per-shingle split this replaced took 37.7 s)."""
+    as written; the per-shingle split this replaced took 37.7 s).
+    NULL when either text is NULL (``array_size`` of a NULL set is NULL
+    whatever ``spark.sql.legacy.sizeOfNull`` says)."""
     sl, sr = shingles_sql(text_l, n), shingles_sql(text_r, n)
     return F.expr(
-        f"size(array_intersect({sl}, {sr})) / size(array_union({sl}, {sr}))"
+        f"array_size(array_intersect({sl}, {sr})) "
+        f"/ array_size(array_union({sl}, {sr}))"
     )
 
 
@@ -1292,7 +1304,8 @@ def minhash_band_keys_portable(
     # minima below are k consumers — without the projection boundary the
     # md5s would recompute per permutation (see winnowing_fingerprint_set's
     # physical-shape note for the CollapseProject reference-count rule)
-    staged = df.select(
+    # a NULL text has NULL shingles: no signature row, never a candidate
+    staged = df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc"),
         F.expr(f"transform({sh}, s -> {digests})").alias("__dg"),
     )

@@ -1,4 +1,5 @@
-"""Plan lint: row-level work that a lambda body recomputes per element.
+"""Plan lint: row-level work that a lambda body recomputes per element, and
+the operators that cross into a Python worker.
 
 Spark's higher-order functions (``transform``, ``filter``, ``aggregate``,
 ...) are ``CodegenFallback``: the lambda body is interpreted once per array
@@ -11,6 +12,10 @@ once, as the single element of an outer ``transform(array(v), t -> ...)[0]``.
 ``lambda_invariants`` finds the remaining cases in a DataFrame's optimized
 plan. ``tests/test_similarity.py`` pins the signing paths to zero and
 ``scripts/plan_audit.py`` reports the count per headline query.
+
+``python_stages`` counts the physical operators that evaluate Python; each
+starts a Python-worker task per partition. ``scripts/plan_audit.py``
+reports it per headline query.
 """
 
 from __future__ import annotations
@@ -19,9 +24,27 @@ import json
 
 from pyspark.sql import DataFrame
 
-__all__ = ["lambda_invariants"]
+__all__ = ["lambda_invariants", "python_stages"]
 
 _LAMBDA = "LambdaFunction"
+# Spark 4 renamed AggregateInPandas, WindowInPandas and PythonMapInArrow to
+# ArrowAggregatePython, ArrowWindowPython and MapInArrow
+_PYTHON_EXECS = frozenset(
+    {
+        "ArrowEvalPythonExec",
+        "ArrowEvalPythonUDTFExec",
+        "BatchEvalPythonExec",
+        "BatchEvalPythonUDTFExec",
+        "MapInPandasExec",
+        "MapInArrowExec",
+        "FlatMapGroupsInPandasExec",
+        "FlatMapGroupsInArrowExec",
+        "FlatMapCoGroupsInPandasExec",
+        "FlatMapCoGroupsInArrowExec",
+        "ArrowAggregatePythonExec",
+        "ArrowWindowPythonExec",
+    }
+)
 _VARIABLE = "NamedLambdaVariable"
 
 
@@ -115,3 +138,14 @@ def lambda_invariants(df: DataFrame) -> list[str]:
         for root in _trees(nodes)
         for call in _invariant_calls(root)
     ]
+
+
+def python_stages(df: DataFrame) -> int:
+    """The number of operators in ``df``'s physical plan that evaluate
+    Python: pandas and row UDFs, ``mapInPandas``/``mapInArrow``, grouped
+    and co-grouped ``applyIn*``, pandas aggregates and windows. Each runs
+    one Python-worker task per partition it reads. Counted on the plan
+    before adaptive execution, so a stage inside an already-materialized
+    checkpoint is not counted."""
+    plan = json.loads(df._jdf.queryExecution().sparkPlan().toJSON())
+    return sum(op["class"].rsplit(".", 1)[-1] in _PYTHON_EXECS for op in plan)

@@ -42,6 +42,15 @@ def get_spark(
       tables (region/nation/...) broadcast automatically; operators that know
       a side is small also hint ``F.broadcast`` explicitly.
     - Arrow on for pandas UDFs (the only sanctioned Python hot path).
+    - Python workers fork from ``scraping_jobsdb_spark.pydaemon``, which stops
+      PySpark re-reading ``pyspark.zip`` at the start of every task (about
+      0.23 s of worker CPU per task; see that module). Set only for a
+      ``local*`` master, where the driver's package directory is also the
+      workers' and is prepended to ``spark.executorEnv.PYTHONPATH``. On a
+      cluster the same two confs work only where this package is installed
+      on the executors, so they are left to the caller there. A
+      caller-passed ``spark.python.daemon.module`` wins, and a caller-passed
+      ``spark.executorEnv.PYTHONPATH`` is kept after the package directory.
     """
     cpus = _cpus()
     builder = (
@@ -74,7 +83,14 @@ def get_spark(
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if (master or os.environ.get("SPARK_MASTER") or "local").startswith("local"):
+        pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        conf.setdefault("spark.python.daemon.module", "scraping_jobsdb_spark.pydaemon")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (pkg_parent, conf.get("spark.executorEnv.PYTHONPATH")) if p
+        )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -90,12 +106,13 @@ def local_df(spark: SparkSession, rows, schema: str):
 
     ``spark.createDataFrame(list, ...)`` parallelizes the rows into
     Python-pickled partitions — every downstream job then pays a
-    Python-worker round trip PER PARTITION (measured ~130 ms each: a
-    ``coalesce(1)`` over the default 32 slices of a 10-row frame stalled
-    ~4 s computing 32 tiny Python partitions sequentially) even though the
-    data is bytes. Handing Spark ONE Arrow table instead gives a
-    ``LocalRelation`` that lives JVM-side from then on: the same frame
-    coalesces, joins, or writes in ~50 ms. Use this for every
+    Python-worker round trip PER PARTITION even though the data is bytes.
+    Most of that round trip used to be PySpark re-reading ``pyspark.zip``
+    at every task (see ``pydaemon``); with the daemon it is about 55 ms. A
+    ``coalesce(1)`` count over 32 slices of a 10-row frame (4 vCPUs,
+    median of 5): 8.9 s before the daemon, 1.8 s with it. Handing Spark
+    ONE Arrow table instead gives a ``LocalRelation`` that lives JVM-side
+    from then on: the same count takes 0.1 s. Use this for every
     codebook-scale side frame (centroids, codebooks, probe-pair lists,
     driver-solved components, parameter grids).
 

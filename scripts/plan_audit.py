@@ -8,8 +8,10 @@ annotation; the no-row-Python invariant is the codegen proxy that matters):
 - ``exchanges``   — SHUFFLE exchange count (BroadcastExchange excluded: a
                     broadcast replicates a small side, it does not rewrite
                     its input across the network)
-- ``arrow_py``    — ArrowEvalPython / mapInPandas stages (vectorized Python;
-                    the sanctioned Python path)
+- ``python_stages`` — operators that evaluate Python (pandas and row UDFs,
+                    mapIn*, applyIn*, pandas aggregates and windows;
+                    ``planlint.python_stages``): each starts a
+                    Python-worker task per partition
 - ``row_py``      — BatchEvalPython stages (row-at-a-time Python UDFs;
                     must stay zero everywhere)
 - ``products``    — CartesianProduct / BroadcastNestedLoopJoin occurrences
@@ -38,7 +40,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def audit() -> str:
-    from scraping_jobsdb_spark.planlint import lambda_invariants
+    from scraping_jobsdb_spark.planlint import lambda_invariants, python_stages
     from scraping_jobsdb_spark.plans.queries import REGISTRY
     from scraping_jobsdb_spark.session import get_spark
 
@@ -53,6 +55,7 @@ def audit() -> str:
             df = REGISTRY[name].spark_fn(spark, SF_DIR)
             plan = df._jdf.queryExecution().executedPlan().toString()
             invariants = len(lambda_invariants(df))
+            py_stages = python_stages(df)
         except Exception as e:  # pragma: no cover - audit must not abort
             # sanitize: '|' or newlines in the message would corrupt the
             # markdown table layout in PLANS.md
@@ -72,7 +75,7 @@ def audit() -> str:
             (
                 name + ckpt,
                 plan.count("Exchange ") - plan.count("BroadcastExchange "),
-                plan.count("ArrowEvalPython") + plan.count("MapInPandas"),
+                py_stages,
                 plan.count("BatchEvalPython"),
                 plan.count("CartesianProduct")
                 + plan.count("BroadcastNestedLoopJoin"),
@@ -85,15 +88,16 @@ def audit() -> str:
         "# PLANS.md — physical-plan audit of the bench headline set",
         "",
         f"Generated by `scripts/plan_audit.py` at `{SF_DIR}`. Markers per",
-        "query: shuffle exchanges, Arrow-vectorized Python stages,",
-        "row-at-a-time Python stages (must be 0), quadratic",
+        "query: shuffle exchanges, operators that evaluate Python (each",
+        "starts a Python-worker task per partition), row-at-a-time",
+        "Python stages (must be 0), quadratic",
         "join operators, whether the scan advertises pushed filters, and",
         "row-level split/regexp calls that a lambda body re-runs per",
         "element (`lambda_invariants`, should be 0).",
         "Regression enforcement is in `tests/test_plan_quality.py`; this is",
         "the human-readable sweep.",
         "",
-        "| query | exchanges | arrow_py | row_py | products | pushed "
+        "| query | exchanges | python_stages | row_py | products | pushed "
         "| lambda_invariants |",
         "|---|---|---|---|---|---|---|",
     ]
@@ -103,9 +107,11 @@ def audit() -> str:
     total_row_py = sum(r[3] for r in ok)
     total_products = sum(r[4] for r in ok)
     total_invariants = sum(r[6] for r in ok)
+    with_python = sum(1 for r in ok if r[2])
     lines += [
         "",
-        f"**Summary:** {len(ok)} queries audited; row-at-a-time Python "
+        f"**Summary:** {len(ok)} queries audited; {with_python} run at least "
+        "one Python operator; row-at-a-time Python "
         f"stages: {total_row_py}; quadratic join operators: {total_products} "
         "(each remaining one is a literal-bounded side — see the per-query "
         f"docstrings); lambda-invariant row-level calls: {total_invariants}.",

@@ -355,3 +355,28 @@ def test_lsh_index_admit_with_presigned_batch_identical(spark, tmp_path):
 
     assert v_plain == v_shared and len(v_plain) > 0
     assert _rows(plain.signatures()) == _rows(shared.signatures())
+
+
+def test_lsh_index_keeps_null_text_documents(spark, tmp_path):
+    """A NULL-text document stores no signature and collides with
+    nothing, under both MinHash hashers: before, it signed like the empty
+    text, so a second NULL document (or an empty one) was dropped as a
+    near-duplicate of the first."""
+    corpus = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "the quick brown fox jumps over it")],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [(10, None), (11, "the quick brown fox jumps over it")],
+        "doc_id long, text string",
+    )
+    for hasher in ("md5-portable", "xxhash64"):
+        idx = LshSignatureIndex.create(
+            spark, str(tmp_path / hasher), corpus, hasher=hasher
+        )
+        assert sorted({r[0] for r in idx.signatures().collect()}) == [2, 3]
+        verdict = dict(
+            (r.doc_id, r.kept)
+            for r in idx.admit_stream_batch(batch, epoch_id=0).collect()
+        )
+        assert verdict == {10: True, 11: False}, hasher

@@ -9,6 +9,7 @@ correctness would never catch.
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from tests.conftest import SF_CORRECT
@@ -494,3 +495,46 @@ def test_coverage_doc_matches_registry():
     assert doc == mod.render(max_round=doc_round), (
         "COVERAGE.md is stale — run scripts/gen_coverage.py"
     )
+
+
+def test_python_stages_counts_python_operators(spark):
+    """``planlint.python_stages`` counts every operator kind that runs a
+    Python worker, once per operator, and nothing in a JVM-only plan."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from scraping_jobsdb_spark.planlint import python_stages
+
+    df = spark.range(10).withColumn("g", F.col("id") % 2)
+
+    @F.pandas_udf("long")
+    def plus(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    @F.pandas_udf("double")
+    def total(s: pd.Series) -> float:
+        return float(s.sum())
+
+    row_udf = F.udf(lambda x: x, "long")
+
+    def ident(batches):
+        yield from batches
+
+    grouped = df.groupBy("g")
+    cases = {
+        "jvm": (df.groupBy("g").count(), 0),
+        "arrow": (df.select(plus("id")), 1),
+        "row": (df.select(row_udf("id")), 1),
+        "arrow_then_row": (df.select(row_udf(plus("id"))), 2),
+        "map_in_pandas": (df.mapInPandas(ident, df.schema), 1),
+        "map_in_arrow": (df.mapInArrow(ident, df.schema), 1),
+        "grouped": (grouped.applyInPandas(lambda p: p, df.schema), 1),
+        "cogrouped": (
+            grouped.cogroup(grouped).applyInPandas(lambda a, b: a, df.schema),
+            1,
+        ),
+        "aggregate": (grouped.agg(total("id")), 1),
+        "window": (df.withColumn("t", total("id").over(Window.partitionBy("g"))), 1),
+    }
+    got = {name: python_stages(d) for name, (d, _) in cases.items()}
+    assert got == {name: n for name, (_, n) in cases.items()}

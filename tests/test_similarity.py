@@ -2237,13 +2237,12 @@ _SHINGLE_CASES = [
 def _shingles_ref(text, n):
     """Pure-Python shingle set with Spark's semantics: trim spaces, split
     on ``\\s+`` keeping empty tokens, slices from every start up to
-    ``max(len - n, 0)``, first occurrence kept. NULL text shingles like
-    the empty text: its token count is NULL, which ``greatest`` skips, and
-    ``concat_ws`` of the NULL slice is ''."""
+    ``max(len - n, 0)``, first occurrence kept. NULL text has NULL
+    shingles; empty text shingles to ``['']``."""
     import re
 
     if text is None:
-        return [""]
+        return None
     toks = re.split(r"\s+", text.strip(" "))
     grams = (" ".join(toks[i:i + n]) for i in range(max(len(toks) - n, 0) + 1))
     return list(dict.fromkeys(grams))
@@ -2278,8 +2277,44 @@ def test_shingles_and_ngram_jaccard_equal_python_reference(spark):
         assert len(jac) == len(_SHINGLE_CASES) ** 2
         for r in jac:
             a, b = _shingles_ref(r.ta, n), _shingles_ref(r.tb, n)
-            want = len(set(a) & set(b)) / len(set(a) | set(b))
+            want = (
+                None
+                if a is None or b is None
+                else len(set(a) & set(b)) / len(set(a) | set(b))
+            )
             assert r.j == want, (r.ta, r.tb, n, r.j, want)
+
+
+def test_ngram_jaccard_with_null_side_is_null(spark):
+    """A NULL text is similar to nothing, not even another NULL or an
+    empty text: before NULL shingled like '' and both pairs scored 1.0."""
+    from scraping_jobsdb_spark.operators.similarity import ngram_jaccard
+
+    pairs = spark.createDataFrame(
+        [(None, None), (None, ""), ("", None), ("a b", None), ("", "")],
+        "ta string, tb string",
+    )
+    got = [
+        r.j
+        for r in pairs.select(
+            ngram_jaccard(None, None, None, "ta", "tb", 3).alias("j")
+        ).collect()
+    ]
+    assert got == [None, None, None, None, 1.0]
+
+
+def test_minhash_candidate_pairs_skip_null_text(spark):
+    """A NULL text gets no signature, so it pairs with nothing; two empty
+    texts still share every band and pair as before."""
+    docs = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, ""), (5, "a b c d e f"),
+         (6, "a b c d e f")],
+        "id long, text string",
+    )
+    got = sorted(
+        tuple(r) for r in minhash_candidate_pairs(docs, "id", "text").collect()
+    )
+    assert got == [(3, 4), (5, 6)]
 
 
 def test_lambda_invariants_detector(spark):
