@@ -8,26 +8,15 @@ family re-derived every corpus signature per run. This module stores the
 corpus band signatures ``(doc_id, band, key)`` in a transactional table
 and maintains the per-bucket size ``(band, key) -> n_docs`` as an
 incrementally-refreshed aggregate view (the hot-bucket guard — the LSH
-analog of the fingerprint index's stop-gram view), so admitting a new
-batch costs
-
-  sign(batch)                                — map-only over the batch
-  + one broadcast probe join into the index  — zero corpus-sized shuffles
-  + append(batch sigs) + O(delta + view) bucket-size refresh
-
-independent of corpus size. In Spark jobs, one ``admit_stream_batch``
-runs 11 — sign 1 (checkpointed once), probe 6 (see ``probe``), kept-id
-collect 1, map-only kept append 1, bucket-size fold 2 — and a compacting
-``maintain`` 1 more: the row-preserving compaction is one map-only
-rewrite, and the view's watermark then moves in a metadata-only commit.
-Each job costs a fixed driver round trip, so at batch sizes of a few
-hundred documents the job count, not the data, sets the batch latency.
+analog of the fingerprint index's stop-gram view), so admitting a batch
+costs the batch, not the corpus. The lifecycle (create, add, stream
+admission, maintenance, fresh-view guard, probe prelude) and its Spark-job
+cost are ``operators/persisted_index.py``'s; this module supplies the band
+signing and the bucket-collision verdict.
 
 Composition of the engine's txn layer (``sources/txn.py``), incremental
 MV layer (``sources/mv.py``), and the MinHash LSH family
-(``operators/similarity.py``) — the signature-level, at-scale
-generalization of the reference's per-run "skip already-scraped job ids"
-anti-join (``airflow/dags/scrape_url.py``, there by exact key).
+(``operators/similarity.py``).
 
 Three hash families share the storage layout, selected at ``create``
 time and pinned in the manifest:
@@ -53,37 +42,21 @@ engines.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scraping_jobsdb_spark.operators.persisted_index import PersistedIndex
 from scraping_jobsdb_spark.operators.similarity import (
     _xxhash_signatures,
-    isin_ids,
     minhash_band_keys_portable,
     simhash_fp_frame,
 )
-from scraping_jobsdb_spark.sources.mv import IncrementalAggView
-from scraping_jobsdb_spark.sources.txn import TxnTable
 
 __all__ = [
     "LshSignatureIndex",
     "minhash_band_keys_fast",
     "simhash_band_keys_portable",
 ]
-
-# v1-manifest keys for the index parameters: every writer and every probe
-# must agree on (k, bands, shingle_n, hasher) or band keys stop being
-# comparable across commits.
-_META_KEYS = (
-    "lsh_k",
-    "lsh_bands",
-    "lsh_shingle_n",
-    "lsh_max_bucket",
-    "lsh_hasher",
-    "lsh_id_col",
-)
 
 _HASHERS = ("md5-portable", "xxhash64", "simhash-portable")
 
@@ -157,43 +130,30 @@ def minhash_band_keys_fast(
     )
 
 
-class LshSignatureIndex:
-    """A corpus LSH signature index at ``path``: a ``TxnTable`` of
-    ``(id, band, key)`` MinHash band signatures under ``path/sigs`` plus
-    an ``IncrementalAggView`` of per-bucket document counts under
-    ``path/bs``. Parameters ride the sigs table's v1 manifest."""
+class LshSignatureIndex(PersistedIndex):
+    """A corpus LSH signature index at ``path``: ``(id, band, key)`` band
+    signatures under ``path/sigs`` plus per-bucket document counts
+    ``(band, key, n_docs)`` under ``path/bs``; buckets over ``max_bucket``
+    documents are the hot buckets. Parameters ride the sigs table's v1
+    manifest as ``lsh_*``."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self.sigs_path = os.path.join(path, "sigs")
-        self.bs_path = os.path.join(path, "bs")
-        m = TxnTable(spark, self.sigs_path)._manifest(1)
-        missing = [k for k in _META_KEYS if k not in m]
-        if missing:
-            raise ValueError(
-                f"{self.sigs_path}: not an LSH signature index (v1 "
-                f"manifest lacks {missing})"
-            )
-        self.k = int(m["lsh_k"])
-        self.bands = int(m["lsh_bands"])
-        self.shingle_n = int(m["lsh_shingle_n"])
-        self.max_bucket = int(m["lsh_max_bucket"])
-        self.hasher = str(m["lsh_hasher"])
-        self.id_col = str(m["lsh_id_col"])
-        self._bs_view = IncrementalAggView(
-            spark,
-            self.sigs_path,
-            self.bs_path,
-            group_cols=["band", "key"],
-            measures={"n_docs": ("count", None)},
-        )
+    _KIND = "an LSH signature index"
+    _DATA_DIR, _VIEW_DIR, _PREFIX = "sigs", "bs", "lsh_"
+    _PARAMS = {
+        "k": int,
+        "bands": int,
+        "shingle_n": int,
+        "max_bucket": int,
+        "hasher": str,
+        "id_col": str,
+    }
+    _CUTOFF = "max_bucket"
+    _GROUP, _MEASURE = ["band", "key"], "n_docs"
+    _ADD_APP_ID, _ADMIT_APP_ID = "lshindex", "lshindex-admit"
 
-    # ------------------------------------------------------------ lifecycle
-
-    @classmethod
-    def exists(cls, spark: SparkSession, path: str) -> bool:
-        return TxnTable.exists(spark, os.path.join(path, "sigs"))
+    @property
+    def sigs_path(self) -> str:
+        return self.data_path
 
     @classmethod
     def create(
@@ -215,270 +175,54 @@ class LshSignatureIndex:
         over the corpus, ever; every later batch pays only its own size."""
         if hasher not in _HASHERS:
             raise ValueError(f"hasher must be one of {_HASHERS}, got {hasher!r}")
-        sigs = _band_keys(
-            corpus, hasher, id_col, text_col, k, bands, shingle_n
-        )
-        TxnTable.create(
+        return cls._persist(
             spark,
-            os.path.join(path, "sigs"),
-            sigs,
-            meta={
-                "lsh_k": int(k),
-                "lsh_bands": int(bands),
-                "lsh_shingle_n": int(shingle_n),
-                "lsh_max_bucket": int(max_bucket),
-                "lsh_hasher": str(hasher),
-                "lsh_id_col": str(id_col),
-            },
+            path,
+            _band_keys(corpus, hasher, id_col, text_col, k, bands, shingle_n),
+            k=k,
+            bands=bands,
+            shingle_n=shingle_n,
+            max_bucket=max_bucket,
+            hasher=hasher,
+            id_col=id_col,
         )
-        idx = cls(spark, path)
-        idx._bs_view.refresh()
-        return idx
-
-    # ------------------------------------------------------------- maintain
 
     def sign(self, docs: DataFrame, text_col: str = "text") -> DataFrame:
-        """``docs``' band signatures ``(id, band, key)`` under THIS
-        index's pinned (k, bands, shingle_n, hasher) parameters — the
-        exact frame every write/probe path derives internally. Public so
-        a caller composing probe-then-add over the same batch can
-        materialize the signing ONCE (``localCheckpoint``) and hand it to
-        both via ``_sig_b``/``_sigs`` (signing is deterministic per doc,
-        so the shared frame is row-identical to each path's own
-        derivation)."""
-        return self._sign(docs, text_col)
-
-    def add(
-        self,
-        docs: DataFrame,
-        text_col: str = "text",
-        _sigs: DataFrame | None = None,
-    ) -> int:
-        """Admit ``docs`` into the corpus: append their band signatures
-        (transactional — all-or-nothing visibility) and fold the append
-        delta into the bucket-size view. Cost: sign(docs) +
-        O(|delta| + |distinct buckets|) — never a corpus rescan. Returns
-        the new sigs-table version. ``_sigs``: an already-materialized
-        ``sign(docs)`` frame (e.g. shared with a preceding ``probe`` of
-        the same batch) — skips the signing map pass; the caller owns the
-        row-identity."""
-        sigs = self._sign(docs, text_col) if _sigs is None else _sigs
-        t = TxnTable(self.spark, self.sigs_path)
-        t.append(sigs)
-        self._bs_view.refresh()
-        return t.version()
-
-    def add_stream_batch(
-        self,
-        docs: DataFrame,
-        epoch_id: int,
-        app_id: str = "lshindex",
-        text_col: str = "text",
-    ) -> int:
-        """The ``foreachBatch`` body that maintains the index from a
-        stream: an epoch-idempotent ``add`` (exactly-once under
-        failure-recovery replays — a batch whose (app_id, epoch) is
-        already in the sigs table's log appends nothing, and the
-        bucket-size refresh then no-ops on the unchanged version).
-        Returns signature rows appended (0 for a recognized replay).
-        Streaming-equals-batch: N micro-batches through this path leave
-        the index byte-identical to one ``add`` of their union (pinned
-        by test)."""
-        sigs = self._sign(docs, text_col)
-        n = TxnTable(self.spark, self.sigs_path).stream_epoch_append(
-            sigs, app_id, epoch_id
+        return _band_keys(
+            docs,
+            self.hasher,
+            self.id_col,
+            text_col,
+            self.k,
+            self.bands,
+            self.shingle_n,
         )
-        self._bs_view.refresh()
-        return n
 
-    def admit_stream_batch(
+    def _score(
         self,
-        docs: DataFrame,
-        epoch_id: int,
-        app_id: str = "lshindex-admit",
-        text_col: str = "text",
-        _sig_b: DataFrame | None = None,
+        ids: DataFrame,
+        pruned: DataFrame,
+        corpus: DataFrame,
+        broadcast_batch: bool,
     ) -> DataFrame:
-        """ONLINE near-dup admission — the ``foreachBatch`` body of a
-        deduplicating ingest stream: probe the batch against the current
-        index, admit ONLY the surviving (``kept``) documents' signatures,
-        and return the verdict frame so the caller can route kept rows to
-        the corpus sink and dropped rows to a reject log. LSH collisions
-        with anything already admitted — including docs admitted by an
-        EARLIER micro-batch — are rejected; collisions WITHIN a batch
-        survive together (batch-vs-corpus, not batch-vs-self: compose
-        with ``minhash_candidate_pairs_portable`` upstream for
-        intra-batch dedup).
-
-        Exactly-once AND replay-stable: the kept-signature append is
-        epoch-keyed (replays append nothing and the bucket-size refresh
-        no-ops), and the probe excludes corpus signatures carrying the
-        batch's OWN doc ids — on a failure-recovery replay the index
-        already holds the first attempt's kept signatures under the same
-        ids, and without the exclusion every previously-kept doc would
-        collide with itself in every band and flip to dropped, so a
-        caller routing kept rows to the corpus sink would lose those docs
-        on recovery. Contract: doc ids are unique across the stream (a
-        re-sent id is the same document, never a self-duplicate)."""
-        # Sign the batch ONCE and share the materialized signatures
-        # between the probe and the kept-signature append (the r13 form
-        # signed twice: the probe's full-batch pass plus a second
-        # kept-subset pass inside the append's write job — signing is
-        # deterministic per doc, so sign(batch) filtered to kept ids is
-        # row-identical to sign(kept_docs), r14). ``_sig_b`` lets a
-        # caller that ALREADY holds a materialized signature frame for
-        # exactly ``docs`` (row-identical to ``self._sign(docs,
-        # text_col)`` — e.g. an upstream intra-batch dedup stage that
-        # signed the same batch with the index's own parameters) hand it
-        # in, removing the whole signing map pass; the caller owns that
-        # equality (deterministic per-doc signing makes a filtered
-        # superset frame valid).
-        sig_b = (
-            self._sign(docs, text_col).localCheckpoint()
-            if _sig_b is None
-            else _sig_b
-        )
-        verdict = self.probe(
-            docs, text_col=text_col, exclude_self_ids=True, _sig_b=sig_b
-        ).localCheckpoint()
-        # The checkpointed verdict holds one row per batch doc: collecting
-        # its kept ids is one small job, and the append then writes sig_b
-        # through a map-only filter (a semi-join against the verdict plans
-        # 4 jobs).
-        kept = [
-            r[0]
-            for r in verdict.filter(F.col("kept")).select(self.id_col).collect()
-        ]
-        TxnTable(self.spark, self.sigs_path).stream_epoch_append(
-            sig_b.filter(isin_ids(self.id_col, kept)), app_id, epoch_id
-        )
-        self._bs_view.refresh()
-        return verdict
-
-    def maintain(self, max_files: int = 64) -> int | None:
-        """Compact the sigs table once its snapshot exceeds ``max_files``
-        files (an ingest loop calls this per admitted batch for amortized
-        O(snapshot/max_files) rewrite cost). Compaction is ROW-PRESERVING,
-        so the bucket-size view's next refresh skips it and keeps folding
-        appends incrementally instead of recounting buckets from the
-        whole index; the refresh here only advances the view's watermark
-        over the compact commit, metadata-only. Cost: one map-only rewrite
-        job when compacting, zero jobs otherwise. Returns the compacted
-        snapshot's file count, or None if under the threshold."""
-        n = TxnTable(self.spark, self.sigs_path).maybe_compact(
-            max_files=max_files
-        )
-        if n is not None:
-            self._bs_view.refresh()
-        return n
-
-    # ---------------------------------------------------------------- reads
-
-    def signatures(self) -> DataFrame:
-        """The corpus band-signature set ``(id, band, key)`` at the
-        current version."""
-        return TxnTable(self.spark, self.sigs_path).read()
-
-    def hot_buckets(self) -> DataFrame:
-        """Buckets holding more than ``max_bucket`` corpus documents —
-        read from the incrementally-maintained bucket-size view (no
-        corpus scan). These are degenerate keys (boilerplate, empty-text
-        signatures) whose quadratic candidate expansion the probe must
-        not pay; the self-contained pairing drops them identically
-        (``minhash_candidate_pairs_portable`` ``max_bucket``). Small by
-        construction (bounded by |sigs| / max_bucket), so consumers
-        broadcast it."""
-        self._require_fresh_bs()
-        return (
-            self._bs_view.read()
-            .filter(F.col("n_docs") > self.max_bucket)
-            .select("band", "key")
-        )
-
-    def refresh(self) -> None:
-        """Fold any sigs-table commits the bucket-size view hasn't seen
-        (O(delta), no-op when already fresh). add()/add_stream_batch()
-        commit signatures and the view refresh as two separate txns; a
-        crash between them leaves the view stale, and this is the public
-        repair entry point — also called automatically by
-        ``_require_fresh_bs`` so a wedged index self-heals on the next
-        probe()/hot_buckets() instead of raising forever."""
-        self._bs_view.refresh()
-
-    def _require_fresh_bs(self) -> None:
-        # The probe's hot-bucket list must reflect every committed
-        # signature or the pruned universes drift between batches. A
-        # stale view is not an invariant violation, just an interrupted
-        # maintenance step (crash between the sigs append and the view
-        # refresh) — repair it by folding the pending delta now.
-        applied = self._bs_view.applied_source_version()
-        current = TxnTable(self.spark, self.sigs_path).version()
-        if applied < current:
-            self.refresh()
-
-    # ---------------------------------------------------------------- probe
-
-    def probe(
-        self,
-        batch: DataFrame,
-        text_col: str = "text",
-        broadcast_batch: bool = True,
-        exclude_self_ids: bool = False,
-        _sig_b: DataFrame | None = None,
-    ) -> DataFrame:
-        """Score every batch document against the stored corpus: one row
-        per batch doc — ``(id, n_bands_hit, n_cand, kept)`` where
-        ``n_cand`` counts distinct stored documents sharing ≥1 non-hot
-        band bucket with the doc, ``n_bands_hit`` counts the doc's bands
-        that collided at all, and ``kept`` = no collision. Candidate
-        semantics, deliberately: LSH asserts similarity only
-        probabilistically, so a pipeline needing verified near-dups joins
-        the dropped docs' candidates back to the corpus store for an
-        exact check (``ngram_jaccard``) — the index's job is to make that
-        candidate set batch-sized instead of corpus-sized.
-
-        Scale shape: the batch signature set is BROADCAST (a batch is
-        small next to a 100 TB corpus), so the probe join streams over
-        the index scan map-side — the only shuffle moves matched (batch
-        doc, corpus doc) pairs, never the index. The hot-bucket list
-        comes from the maintained bucket-size view (a broadcast anti-join
-        on the batch side only). The per-doc hit counts are batch-sized
-        and broadcast into the final join, so the batch ids never
-        shuffle. Set ``broadcast_batch=False`` for a backfill-sized
-        batch; the planner then picks both join strategies.
-        ``exclude_self_ids`` drops corpus signatures whose id appears in
-        the batch itself before scoring — the replay-stability guard
-        ``admit_stream_batch`` relies on.
-
-        Cost, in Spark jobs, with broadcast on and ``_sig_b`` supplied:
-        the hot-bucket, batch-signature and (with ``exclude_self_ids``)
-        batch-id broadcasts, one shuffle-map job for the hit counts, their
-        broadcast, and the action's own job — 6."""
-        hot = F.broadcast(self.hot_buckets())
-        # ``_sig_b``: already-materialized batch signatures supplied by
-        # admit_stream_batch (signed once, shared with the kept append);
-        # the hot anti-join over a checkpointed frame is cheap, so only
-        # the standalone path pays its own materialization.
-        sig_b = self._sign(batch, text_col) if _sig_b is None else _sig_b
-        pruned_b = sig_b.join(hot, ["band", "key"], "left_anti").select(
-            F.col(self.id_col).alias("__bid"), "band", "key"
-        )
-        if _sig_b is None:
-            pruned_b = pruned_b.localCheckpoint()
+        """``(id, n_bands_hit, n_cand, kept)`` where ``n_cand`` counts
+        distinct stored documents sharing ≥1 non-hot band bucket with the
+        doc, ``n_bands_hit`` counts the doc's bands that collided at all,
+        and ``kept`` = no collision. Candidate semantics, deliberately: LSH
+        asserts similarity only probabilistically, so a pipeline needing
+        verified near-dups joins the dropped docs' candidates back to the
+        corpus store for an exact check (``ngram_jaccard``) — the index's
+        job is to make that candidate set batch-sized instead of
+        corpus-sized. The per-doc hit counts are batch-sized and broadcast
+        into the final join, so the batch ids never shuffle."""
+        pruned = pruned.select(F.col(self.id_col).alias("__bid"), "band", "key")
         if broadcast_batch:
-            pruned_b = F.broadcast(pruned_b)
-        # No hot anti-join on the corpus side: pruned_b holds no hot key,
-        # so the (band, key) equi-join below can never match one.
-        corpus = self.signatures()
-        if exclude_self_ids:
-            corpus = corpus.join(
-                F.broadcast(batch.select(self.id_col)), self.id_col, "left_anti"
-            )
+            pruned = F.broadcast(pruned)
         # collect_set sizes, not countDistinct: two distinct counts plan as
         # an Expand with two shuffles; the sets are candidate-sized per
         # batch doc and aggregate map-side in ONE shuffle.
         hits = (
-            pruned_b.join(
+            pruned.join(
                 corpus.select(
                     F.col(self.id_col).alias("__cid"), "band", "key"
                 ),
@@ -492,28 +236,11 @@ class LshSignatureIndex:
         )
         if broadcast_batch:
             hits = F.broadcast(hits)
-        return (
-            batch.select(self.id_col)
-            .join(hits, F.col(self.id_col) == F.col("__bid"), "left")
-            .select(
-                self.id_col,
-                F.coalesce("n_bands_hit", F.lit(0)).alias("n_bands_hit"),
-                F.coalesce("n_cand", F.lit(0)).alias("n_cand"),
-                (F.coalesce("n_cand", F.lit(0)) == 0).alias("kept"),
-            )
-        )
-
-    # -------------------------------------------------------------- helpers
-
-    def _sign(self, docs: DataFrame, text_col: str) -> DataFrame:
-        return _band_keys(
-            docs,
-            self.hasher,
+        return ids.join(hits, F.col(self.id_col) == F.col("__bid"), "left").select(
             self.id_col,
-            text_col,
-            self.k,
-            self.bands,
-            self.shingle_n,
+            F.coalesce("n_bands_hit", F.lit(0)).alias("n_bands_hit"),
+            F.coalesce("n_cand", F.lit(0)).alias("n_cand"),
+            (F.coalesce("n_cand", F.lit(0)) == 0).alias("kept"),
         )
 
 

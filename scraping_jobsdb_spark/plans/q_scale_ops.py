@@ -778,11 +778,11 @@ def q_incremental_indexed_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derivation — the r14 admit_stream_batch construction, applied to
     # the probe-then-add composition; one signing map pass per batch
     # instead of two, at any scale).
-    fps_b1 = idx.fingerprint(batch1).localCheckpoint()
-    v1 = idx.probe(batch1, threshold_milli=800, _fps_b=fps_b1).withColumn(
+    fps_b1 = idx.sign(batch1).localCheckpoint()
+    v1 = idx.probe(batch1, threshold_milli=800, _signed=fps_b1).withColumn(
         "batch_no", F.lit(1).cast("int")
     )
-    idx.add(batch1, _fps=fps_b1)
+    idx.add(batch1, _signed=fps_b1)
     v2 = idx.probe(batch2, threshold_milli=800).withColumn(
         "batch_no", F.lit(2).cast("int")
     )
@@ -1712,10 +1712,10 @@ def q_incremental_minhash_indexed_dedup(
     # sign batch 1 ONCE, shared by probe + admission append (deterministic
     # per-doc signing — see incremental_indexed_dedup)
     sig_b1 = idx.sign(batch1).localCheckpoint()
-    v1 = idx.probe(batch1, _sig_b=sig_b1).withColumn(
+    v1 = idx.probe(batch1, _signed=sig_b1).withColumn(
         "batch_no", F.lit(1).cast("int")
     )
-    idx.add(batch1, _sigs=sig_b1)
+    idx.add(batch1, _signed=sig_b1)
     v2 = idx.probe(batch2).withColumn("batch_no", F.lit(2).cast("int"))
     return v1.unionByName(v2).select(
         "doc_id", "batch_no", "n_bands_hit", "n_cand", "kept"
@@ -1906,10 +1906,10 @@ def q_incremental_simhash_indexed_dedup(
     # sign batch 1 ONCE, shared by probe + admission append (deterministic
     # per-doc signing — see incremental_indexed_dedup)
     sig_b1 = idx.sign(batch1).localCheckpoint()
-    v1 = idx.probe(batch1, _sig_b=sig_b1).withColumn(
+    v1 = idx.probe(batch1, _signed=sig_b1).withColumn(
         "batch_no", F.lit(1).cast("int")
     )
-    idx.add(batch1, _sigs=sig_b1)
+    idx.add(batch1, _signed=sig_b1)
     v2 = idx.probe(batch2).withColumn("batch_no", F.lit(2).cast("int"))
     return v1.unionByName(v2).select(
         "doc_id", "batch_no", "n_bands_hit", "n_cand", "kept"
@@ -2824,7 +2824,7 @@ def q_online_admission_intra_batch(
     # index manifest), so the batch is signed once, materialized, and
     # shared: the pair stage consumes the band keys directly
     # (minhash_pairs_from_band_keys) and the admission receives the
-    # survivor subset via ``_sig_b`` (signing is deterministic per doc, so
+    # survivor subset via ``_signed`` (signing is deterministic per doc, so
     # the semi-joined subset is row-identical to re-signing the
     # survivors). The r13 form signed the batch twice per run — once
     # inside the pair stage and once inside admit_stream_batch.
@@ -2847,14 +2847,14 @@ def q_online_admission_intra_batch(
             k=16, bands=4, shingle_n=3, max_bucket=64,
         )
         idx.admit_stream_batch(
-            survivors, epoch_id=0, app_id="intra-admit", _sig_b=sig_surv
+            survivors, epoch_id=0, app_id="intra-admit", _signed=sig_surv
         )
         _steady_done("intralsh", sf_dir, path)
     idx = LshSignatureIndex(spark, path)
     # epoch-0 replay: probe vs the settled index (self-excluding the
     # batch's own admitted signatures), kept-only append no-ops
     verdict = idx.admit_stream_batch(
-        survivors, epoch_id=0, app_id="intra-admit", _sig_b=sig_surv
+        survivors, epoch_id=0, app_id="intra-admit", _signed=sig_surv
     )
     flags = batch.join(
         dropped.withColumn("__dropped", F.lit(True)), "doc_id", "left"

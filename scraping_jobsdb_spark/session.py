@@ -17,6 +17,10 @@ from pyspark.sql import SparkSession
 __all__ = ["get_spark", "stop_spark", "local_df"]
 
 
+# Local-mode Python workers fork from this module (see ``get_spark``).
+_DAEMON = "scraping_jobsdb_spark.pydaemon"
+
+
 def _cpus() -> int:
     try:
         return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
@@ -86,7 +90,7 @@ def get_spark(
     conf = dict(extra_conf or {})
     if (master or os.environ.get("SPARK_MASTER") or "local").startswith("local"):
         pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        conf.setdefault("spark.python.daemon.module", "scraping_jobsdb_spark.pydaemon")
+        conf.setdefault("spark.python.daemon.module", _DAEMON)
         conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
             p for p in (pkg_parent, conf.get("spark.executorEnv.PYTHONPATH")) if p
         )
@@ -145,9 +149,17 @@ def ship_package(spark: SparkSession) -> None:
     so workers must be able to ``import scraping_jobsdb_spark`` themselves —
     true on a real cluster (spark-submit --py-files) and NOT guaranteed in
     local mode when the driver's cwd is elsewhere. Idempotent per session;
-    pure-expression operators never need it.
+    pure-expression operators never need it. A ``get_spark`` local session
+    needs no zip either: its workers fork from ``pydaemon``, which has
+    already imported the package.
     """
     if getattr(spark, "_sjs_package_shipped", False):
+        return
+    if spark.conf.get("spark.python.daemon.module", None) == _DAEMON:
+        # The daemon imported this package from the driver's source tree
+        # before forking, so every worker already holds it: a shipped zip
+        # would never be read, yet each task would stat it on sys.path.
+        spark._sjs_package_shipped = True
         return
     import tempfile
     import zipfile

@@ -1400,10 +1400,12 @@ class TxnTable:
 
     def committed_epoch(self, app_id: str) -> int:
         """Highest epoch committed by ``app_id`` (-1 if none) — the replay
-        ledger for streaming writers."""
+        ledger for streaming writers. Reads each manifest as stored: the
+        (app_id, epoch) stamp is the commit's own, so a delta manifest
+        needs no walk back to its checkpoint."""
         best = -1
         for v in range(1, self.version() + 1):
-            m = self._manifest(v)
+            m = _read_raw_manifest(self.path, v)
             if m.get("app_id") == app_id:
                 best = max(best, int(m.get("epoch", -1)))
         return best

@@ -205,12 +205,10 @@ def test_lsh_index_maintain_compaction_preserves_rows(spark, tmp_path):
 def test_lsh_index_fast_hasher_and_guards(spark, tmp_path):
     """The xxhash64 hot-path hasher shares the index mechanics: probe
     equals the direct banding derivation, near-dups are caught, the
-    manifest round-trips parameters (including the hasher), and a
-    bucket-size view left stale by an out-of-band write refuses to
-    probe."""
+    manifest round-trips parameters (including the hasher), and an
+    unknown hasher is refused. (A stale bucket-size view is
+    test_index_admission.py::test_stale_view_repairs_on_probe.)"""
     import pytest
-
-    from scraping_jobsdb_spark.sources.txn import TxnTable
 
     corpus, batch1, batch2 = _splits(spark)
     idx = LshSignatureIndex.create(
@@ -245,25 +243,6 @@ def test_lsh_index_fast_hasher_and_guards(spark, tmp_path):
         reopened.hasher,
         reopened.id_col,
     ) == (16, 4, 3, 64, "xxhash64", "doc_id")
-
-    # Crash-shaped state: signatures committed but the bucket-size view
-    # refresh never ran (here simulated by appending raw signatures
-    # out-of-band). The next probe must SELF-HEAL — fold the pending
-    # delta and answer — not wedge the index behind a raise with no
-    # public repair path.
-    TxnTable(spark, idx.sigs_path).append(
-        spark.createDataFrame(
-            [(99999, 0, "sentinel")], "doc_id bigint, band int, key string"
-        )
-    )
-    sigs_v = TxnTable(spark, idx.sigs_path).version()
-    assert idx._bs_view.applied_source_version() < sigs_v  # genuinely stale
-    healed = _rows(idx.probe(batch2))
-    assert idx._bs_view.applied_source_version() == sigs_v
-    assert len(healed) == len(got)
-    # idempotent explicit repair entry point
-    idx.refresh()
-    assert idx._bs_view.applied_source_version() == sigs_v
 
     with pytest.raises(ValueError, match="hasher"):
         LshSignatureIndex.create(
@@ -326,7 +305,7 @@ def test_lsh_index_simhash_hasher(spark, tmp_path):
 
 
 def test_lsh_index_admit_with_presigned_batch_identical(spark, tmp_path):
-    """``admit_stream_batch(_sig_b=...)`` — the shared-signing-pass form
+    """``admit_stream_batch(_signed=...)`` — the shared-signing-pass form
     (r14: a caller that already signed the batch, e.g. an intra-batch
     dedup stage, hands the materialized signatures in instead of paying a
     second signing map pass) — yields verdicts AND index state
@@ -350,7 +329,7 @@ def test_lsh_index_admit_with_presigned_batch_identical(spark, tmp_path):
         survivors.select("doc_id"), "doc_id", "left_semi"
     )
     v_shared = _rows(
-        shared.admit_stream_batch(survivors, epoch_id=0, _sig_b=sig_surv)
+        shared.admit_stream_batch(survivors, epoch_id=0, _signed=sig_surv)
     )
 
     assert v_plain == v_shared and len(v_plain) > 0

@@ -1265,55 +1265,6 @@ def test_fingerprint_index_probe_equals_self_contained(spark, tmp_path):
     assert flagged >= len(got2) * 0.8
 
 
-def test_fingerprint_index_stale_df_view_repairs(spark, tmp_path):
-    """A probe whose stop-gram view lags the fps table repairs the view
-    first: writing fingerprints around the index API (direct
-    TxnTable.append — the state a crash between the fps commit and the
-    view refresh leaves) makes the view stale, and the next probe folds
-    the pending delta before it prunes, the way LshSignatureIndex heals
-    its bucket-size view. A silently-stale stop-gram list would drift the
-    pruned universe between batches."""
-    from scraping_jobsdb_spark.operators.fpindex import FingerprintIndex
-    from scraping_jobsdb_spark.sources.txn import TxnTable
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    idx = FingerprintIndex.create(
-        spark, str(tmp_path / "idx"), docs.filter(F.col("doc_id") < 100)
-    )
-    # bypass the API: append raw fingerprints without refreshing the view
-    TxnTable(spark, idx.fps_path).append(
-        spark.createDataFrame([(99999, 12345)], "doc_id bigint, h bigint")
-    )
-    fps_v = TxnTable(spark, idx.fps_path).version()
-    assert idx._df_view.applied_source_version() < fps_v  # genuinely stale
-    probe = docs.filter(F.col("doc_id") < 10)
-    healed = sorted(map(tuple, idx.probe(probe).collect()))
-    assert idx._df_view.applied_source_version() == fps_v
-    # the repaired view equals a from-scratch recount of the fps table
-    recount = idx.fingerprints().groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    assert sorted(map(tuple, idx._df_view.read().collect())) == sorted(
-        map(tuple, recount.collect())
-    )
-    # probe results equal those of an index built with the view in step
-    fresh = FingerprintIndex.create(
-        spark, str(tmp_path / "fresh"), docs.filter(F.col("doc_id") < 100)
-    )
-    fresh.add(spark.createDataFrame([(99999, "")], "doc_id bigint, text string"),
-              _fps=spark.createDataFrame([(99999, 12345)], "doc_id bigint, h bigint"))
-    assert healed == sorted(map(tuple, fresh.probe(probe).collect()))
-    # idempotent explicit repair entry point
-    idx.refresh()
-    assert idx._df_view.applied_source_version() == fps_v
-    # parameters round-trip through the manifest
-    reopened = FingerprintIndex(spark, str(tmp_path / "idx"))
-    assert (reopened.k, reopened.w, reopened.max_df, reopened.id_col) == (
-        8,
-        4,
-        50,
-        "doc_id",
-    )
-
-
 # ------------------------------------------------- cap + sequence packing
 
 
@@ -1710,12 +1661,12 @@ def test_fingerprint_index_maintain_compacts_without_view_recompute(spark, tmp_p
         idx.fps_path, v_compact - 1, t.version(), skip_row_preserving=True
     )
     assert files  # the walk crosses the compact and sees only the append
-    assert idx._df_view.applied_source_version() == t.version()
+    assert idx._view.applied_source_version() == t.version()
     # stop-gram view still exactly matches a from-scratch recount
     recount = (
-        idx.fingerprints().groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+        idx.signatures().groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     )
-    got = sorted(map(tuple, idx._df_view.read().collect()))
+    got = sorted(map(tuple, idx._view.read().collect()))
     assert got == sorted(map(tuple, recount.collect()))
 
 

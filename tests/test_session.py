@@ -131,3 +131,64 @@ def test_daemon_conf_only_for_local_master(monkeypatch):
     opts = session.get_spark(master="yarn")
     assert "spark.python.daemon.module" not in opts
     assert "spark.executorEnv.PYTHONPATH" not in opts
+
+
+def test_ship_package_ships_nothing_under_pydaemon(spark, tmp_path, monkeypatch):
+    """In a ``get_spark`` session the workers fork from ``pydaemon``, which
+    has imported the package already: ``ship_package`` writes no zip and
+    adds no Python include, and a task importing an engine module still
+    runs."""
+    import tempfile
+
+    from scraping_jobsdb_spark import session
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.delattr(spark, "_sjs_package_shipped", raising=False)
+    sc = spark.sparkContext
+    includes = list(sc._python_includes)
+    session.ship_package(spark)
+    assert list(tmp_path.glob("scraping_jobsdb_spark-pyfiles-*.zip")) == []
+    assert sc._python_includes == includes
+
+    def task(batches):
+        import pandas as pd
+
+        from scraping_jobsdb_spark.operators import textops
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"ok": [callable(textops.normalize_text)]})
+
+    (row,) = spark.range(1).coalesce(1).mapInPandas(task, "ok boolean").collect()
+    assert row.ok
+
+
+@pytest.mark.parametrize("daemon", [None, "pyspark.daemon"])
+def test_ship_package_zips_for_other_daemons(tmp_path, monkeypatch, daemon):
+    """A session whose workers do not fork from ``pydaemon`` (a vanilla
+    session, a cluster) still gets the package as a zip on its
+    Python path."""
+    import tempfile
+
+    from scraping_jobsdb_spark import session
+
+    added = []
+
+    class Conf:
+        def get(self, key, default=None):
+            return daemon if key == "spark.python.daemon.module" else default
+
+    class Context:
+        def addPyFile(self, path):
+            added.append(path)
+
+    class Session:
+        conf = Conf()
+        sparkContext = Context()
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    session.ship_package(Session())
+    (zip_path,) = tmp_path.glob("scraping_jobsdb_spark-pyfiles-*.zip")
+    assert added == [str(zip_path)]
+    with zipfile.ZipFile(zip_path) as zf:
+        assert "scraping_jobsdb_spark/operators/textops.py" in zf.namelist()

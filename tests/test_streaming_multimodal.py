@@ -1018,7 +1018,7 @@ def test_streaming_dedup_admission_rejects_cross_batch_neardups(spark, tmp_path)
     )
     # index holds fingerprints for exactly the admitted ids
     admitted = {r.doc_id for r in v1.filter(F.col("kept")).collect()} | kept2
-    indexed = {r.doc_id for r in idx.fingerprints().select("doc_id").distinct().collect()}
+    indexed = {r.doc_id for r in idx.signatures().select("doc_id").distinct().collect()}
     assert indexed <= admitted
     assert len(indexed) >= 0.95 * len(admitted)  # only fingerprint-less (tiny) docs may miss
 
