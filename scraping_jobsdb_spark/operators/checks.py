@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "CheckResult",
     "run_checks",
+    "raise_failed",
     "unique_check",
     "null_check",
     "bounds_check",
@@ -68,13 +69,22 @@ def run_checks(
         CheckResult(name, bool(row[f"__ok_{i}"]), row[f"__obs_{i}"])
         for i, (name, _, _) in enumerate(checks)
     ]
+    if raise_on_fail:
+        raise_failed(results)
+    return results
+
+
+def raise_failed(results: list[CheckResult], detail: str = "") -> None:
+    """Raise AssertionError listing every failed check (then ``detail``),
+    the one failure message for checks computed by ``run_checks`` and for
+    checks read off ``observed`` metrics."""
     failed = [r for r in results if not r.passed]
-    if failed and raise_on_fail:
+    if failed:
         raise AssertionError(
             "data-quality checks failed: "
             + "; ".join(f"{r.name} (observed={r.observed!r})" for r in failed)
+            + detail
         )
-    return results
 
 
 def observed(

@@ -19,6 +19,11 @@ Scale: fetch stages parallelize by repartitioning the URL frame; politeness
 is per-partition rate limiting (F18), so aggregate throughput = partitions ×
 1/delay. Everything after the fetch is shuffle-minimal: one hash shuffle for
 dedup, one broadcast-able anti-join, map-only extraction.
+
+Cost: a day's Spark jobs follow the day, not the history. The DQ checks and
+the row counts ride the lake write as observed metrics (no scan of their
+own), ``catalog_size`` is read from the catalog's parquet footers, and each
+table's append writes at most ``defaultParallelism`` files.
 """
 
 from __future__ import annotations
@@ -32,9 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from scraping_jobsdb_spark.operators.checks import null_check, run_checks, unique_check
+from scraping_jobsdb_spark.operators.checks import CheckResult, observed, raise_failed
 from scraping_jobsdb_spark.operators.dedup import dedup_first
 from scraping_jobsdb_spark.operators.incremental import new_rows
+from scraping_jobsdb_spark.schemas import LAKE_DOCUMENT
 from scraping_jobsdb_spark.session import local_df
 
 Transport = Callable[[str], str]
@@ -131,7 +137,18 @@ def ingest(
     runs — the reference leaned on Postgres ON CONFLICT for the same
     guarantee. The lake itself stays plain date-partitioned Parquet (raw
     immutable files; the catalog anti-join upstream already gates what lands
-    there)."""
+    there).
+
+    A detail page whose fetch failed lands in the lake with NULL html but
+    not in the catalog, so the next run fetches it again; this run raises
+    ``AssertionError`` naming the failed job ids, after the rest of the day
+    has landed. The catalog's job ids are unique by construction
+    (``dedup_first`` builds the delta, the keyed ``idempotent_append``
+    writes it), so no check scans the catalog.
+
+    Cost: ``jobs_scraped`` and the failed-fetch count are observed metrics
+    of the lake write and ``catalog_size`` is summed from parquet footers
+    (``TxnTable.row_count``), so the stats and checks add no Spark job."""
     from scraping_jobsdb_spark.sources.txn import TxnTable
 
     grid = build_param_grid(spark, keywords, bands)
@@ -201,7 +218,12 @@ def ingest(
     # that is duplicated HTTP load (a politeness violation) and, if the site
     # changes between executions, divergent lineages. The checkpointed state
     # is one day's (url, membership) rows — tiny relative to the corpus.
-    memberships = memberships.localCheckpoint()
+    #
+    # The checkpoint keeps the fetch width (two fetch_partitions-wide stages);
+    # the coalesce after it sizes the day's appends to the cores rather than
+    # to that width, which would write one small file per fetch partition.
+    n_files = spark.sparkContext.defaultParallelism
+    memberships = memberships.localCheckpoint().coalesce(n_files)
 
     # --- exactly-once append on the composite uniqueness key (A3)
     raw_table = (
@@ -234,18 +256,32 @@ def ingest(
     # executor block storage; the lineage cut is deliberate.
     detail_html = fetch_html(
         todo, transport, partitions=fetch_partitions, delay_s=delay_s
-    ).localCheckpoint()
+    ).localCheckpoint().coalesce(n_files)
+    values = {
+        "job_id": F.col("job_id"),
+        "url": F.col("url"),
+        "html": F.col("html"),
+        "scraped_date": F.lit(run_date),
+        "year": F.lit(run_date.year),
+        "month": F.lit(run_date.month),
+        "day": F.lit(run_date.day),
+    }
     lake_rows = detail_html.select(
-        "job_id", "url", "html",
-        F.lit(run_date).alias("scraped_date"),
-        F.lit(run_date.year).alias("year"),
-        F.lit(run_date.month).alias("month"),
-        F.lit(run_date.day).alias("day"),
+        *[values[f.name].cast(f.dataType).alias(f.name) for f in LAKE_DOCUMENT.fields]
     )
-    lake_rows.write.mode("append").partitionBy("year", "month", "day").parquet(lake_path)
+    # the row count and the failed-fetch count ride the write (A5)
+    landing, landed = observed(lake_rows, "ingest_lake_write", {
+        "rows": F.count(F.lit(1)),
+        "null_html": F.count(F.lit(1)) - F.count("html"),
+    })
+    landing.write.mode("append").partitionBy("year", "month", "day").parquet(lake_path)
+    lake_stats = landed.get()
 
-    # --- catalog update (A6 batch form: exactly-once append of new keys)
-    new_catalog = lake_rows.select(
+    # --- catalog update (A6 batch form: exactly-once append of new keys).
+    # Only pages that landed: a failed fetch stays out, so the next run's
+    # anti-join fetches it again. html_present stays a CASE so the column
+    # keeps the nullable type the catalog schema records.
+    new_catalog = lake_rows.filter(F.col("html").isNotNull()).select(
         "job_id", "url", "scraped_date",
         F.when(F.col("html").isNotNull(), F.lit("y")).alias("html_present"),
     )
@@ -253,16 +289,21 @@ def ingest(
         catalog_table = TxnTable.create(spark, catalog_path, schema=new_catalog.schema)
     catalog_table.idempotent_append(new_catalog, ["job_id"])
 
-    # --- fail-loud DQ checks (A5): catalog keys unique, no missing html
-    catalog_now = catalog_table.read()
-    run_checks(catalog_now, [unique_check("job_id"), null_check("html_present")])
+    # --- fail-loud DQ check (A5): every fetched page landed
+    n_failed = lake_stats["null_html"]
+    check = CheckResult("not_null:html_present", n_failed == 0, n_failed)
+    if not check.passed:
+        failed_ids = sorted(
+            r.job_id for r in lake_rows.filter(F.col("html").isNull()).collect()
+        )
+        raise_failed([check], f"; failed fetches: job_id {failed_ids}")
 
     from scraping_jobsdb_spark.observability import get_logger
 
     stats = {
         "new_memberships": n_new_memberships,
-        "jobs_scraped": lake_rows.count(),
-        "catalog_size": catalog_now.count(),
+        "jobs_scraped": lake_stats["rows"],
+        "catalog_size": catalog_table.row_count(),
     }
     get_logger().info(
         "ingest finished", extra={"ctx": {"job": "ingest", "run_date": str(run_date), **stats}}

@@ -18,11 +18,15 @@ ON CONFLICT guarantee, ``sql/scrape_url_insert_data.sql:4``).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scraping_jobsdb_spark.operators.extract import extract_jobs
 from scraping_jobsdb_spark.operators.incremental import new_rows
+from scraping_jobsdb_spark.schemas import LAKE_DOCUMENT
+from scraping_jobsdb_spark.session import local_df
 from scraping_jobsdb_spark.sources.txn import TxnTable
 
 __all__ = ["parse"]
@@ -40,7 +44,11 @@ def parse(
 
     Passing year/month/day prunes the lake scan to those partitions (the
     reference never exploited its own date layout — SURVEY.md §4 'partition
-    pruning')."""
+    pruning').
+
+    Cost: the lake is read with its declared schema (``LAKE_DOCUMENT``, the
+    one ingest writes), so no schema-inference job runs; with all three of
+    year/month/day given only that day's directory is listed."""
     from scraping_jobsdb_spark.observability import get_logger, job_log
 
     with job_log(get_logger(), "parse", lake=lake_path, parsed=parsed_path) as rec:
@@ -57,7 +65,7 @@ def _parse(
     month: int | None = None,
     day: int | None = None,
 ) -> int:
-    lake = spark.read.parquet(lake_path)
+    lake = _read_lake(spark, lake_path, year, month, day)
     for col, val in (("year", year), ("month", month), ("day", day)):
         if val is not None:
             lake = lake.filter(F.col(col) == val)
@@ -92,3 +100,22 @@ def _parse(
     if table is None:
         table = TxnTable.create(spark, parsed_path, schema=out.schema)
     return table.idempotent_append(out, ["job_id"])
+
+
+def _read_lake(
+    spark: SparkSession,
+    lake_path: str,
+    year: int | None,
+    month: int | None,
+    day: int | None,
+) -> DataFrame:
+    """The lake under its declared schema. On a local lake one given day
+    reads only its partition directory (``basePath`` keeps year/month/day
+    as columns); a day that landed no pages has none and reads as empty."""
+    reader = spark.read.schema(LAKE_DOCUMENT)
+    if year is None or month is None or day is None or not os.path.isdir(lake_path):
+        return reader.parquet(lake_path)
+    part = os.path.join(lake_path, f"year={year}", f"month={month}", f"day={day}")
+    if not os.path.isdir(part):
+        return local_df(spark, [], LAKE_DOCUMENT)
+    return reader.option("basePath", lake_path).parquet(part)

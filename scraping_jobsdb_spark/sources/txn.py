@@ -42,13 +42,16 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from scraping_jobsdb_spark.session import local_df
 
 __all__ = [
     "TxnTable",
@@ -259,6 +262,27 @@ def append_delta_files(
     return out
 
 
+def _epoch_ledger(table_path: str, version: int) -> dict[str, int]:
+    """``{app_id: highest epoch}`` over versions ``1..version``. Every
+    manifest carries this ledger under "epochs", each commit folding its
+    own (app_id, epoch) stamp into its base's, so one raw read answers it.
+    A manifest written before the ledger existed has none: the stamps are
+    then collected from every manifest as stored (a stamp belongs to its
+    own commit, so a delta manifest needs no walk back)."""
+    if version <= 0:
+        return {}
+    m = _read_raw_manifest(table_path, version)
+    if "epochs" in m:
+        return dict(m["epochs"])
+    ledger: dict[str, int] = {}
+    for v in range(1, version + 1):
+        m = _read_raw_manifest(table_path, v)
+        if "app_id" in m:
+            app, epoch = m["app_id"], int(m.get("epoch", -1))
+            ledger[app] = max(ledger.get(app, -1), epoch)
+    return ledger
+
+
 def _footer_row_count(files: list[str]) -> int | None:
     """Total row count straight from the parquet footers (exact by format
     contract) — the zero-job replacement for a read-back ``count()`` on
@@ -350,6 +374,33 @@ def _zorder_value(df: DataFrame, cols: list[str]) -> Column:
                 )
             )
     return z
+
+
+# Brackets the offending key (as JSON) in the error a duplicate merge-source
+# key raises inside the write, so merge() can re-raise it as ValueError.
+_DUP_KEY_TAG = "__sjs_merge_dup_key__"
+
+
+def _one_row_per_key(
+    source: DataFrame, on: list[str], bucket: dict[str, Any] | None
+) -> DataFrame:
+    """``source`` guarded so that a key held by more than one row fails the
+    query that reads it (``raise_error``). The window is partitioned on the
+    merge keys, so the join's source-side exchange serves it. A bucketed
+    target fixes that exchange at its bucket layout, so the source is
+    pre-partitioned the same way; a window shuffle at the default width
+    would otherwise be re-shuffled to the bucket count."""
+    if bucket and set(bucket["cols"]) <= set(on):
+        source = source.repartition(bucket["n"], *bucket["cols"])
+    n_rows = F.count(F.lit(1)).over(Window.partitionBy(*on))
+    failed = F.raise_error(
+        F.concat(F.lit(_DUP_KEY_TAG), F.to_json(F.struct(*on)), F.lit(_DUP_KEY_TAG))
+    )
+    return (
+        source.withColumn("__n_key", n_rows)
+        .filter(F.when(F.col("__n_key") > 1, failed).otherwise(F.lit(True)))
+        .drop("__n_key")
+    )
 
 
 def _manifest_name(version: int) -> str:
@@ -960,6 +1011,11 @@ class TxnTable:
                 }
         if not extra.get("dvs", {"_": 1}):
             extra.pop("dvs", None)  # drop an emptied map entirely
+        epochs = _epoch_ledger(self.path, base_version)
+        if "app_id" in extra:
+            app = extra["app_id"]
+            epochs[app] = max(epochs.get(app, -1), int(extra["epoch"]))
+        extra["epochs"] = epochs
         import time
 
         committed_at = time.time()
@@ -1094,12 +1150,24 @@ class TxnTable:
         schema = StructType.fromJson(json.loads(m["schema"]))
         files = [os.path.join(self.path, f) for f in m["files"]]
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return local_df(self.spark, [], schema)
         bucket = m.get("bucket")
         if bucket:
             return self._read_bucketed(m, schema, bucket)
         df = self.spark.read.schema(schema).parquet(*files)
         return self._dv_overlay(df, m, m["files"])
+
+    def row_count(self, version: int | None = None) -> int:
+        """Rows in the snapshot as of ``version``, summed from the data
+        files' parquet footers: no Spark job. A snapshot with deletion
+        vectors (footers still count the deleted rows), or whose footers
+        cannot be read, is counted with a Spark scan instead."""
+        m = self._manifest(version)
+        if not m.get("dvs"):
+            n = _footer_row_count([os.path.join(self.path, f) for f in m["files"]])
+            if n is not None:
+                return n
+        return self.read(version).count()
 
     def _read_bucketed(
         self, m: dict[str, Any], schema: StructType, bucket: dict[str, Any]
@@ -1187,7 +1255,7 @@ class TxnTable:
             kept_set.update(self.pruned_files(col, v, v, version))
         files = [f for f in m["files"] if f in kept_set]
         if not files:
-            df = self.spark.createDataFrame([], schema)
+            df = local_df(self.spark, [], schema)
         else:
             df = self._dv_overlay(
                 self.spark.read.schema(schema).parquet(
@@ -1216,7 +1284,7 @@ class TxnTable:
             kept &= set(self.pruned_files(col, lo, hi, version))
         files = [f for f in m["files"] if f in kept]
         if not files:
-            df = self.spark.createDataFrame([], schema)
+            df = local_df(self.spark, [], schema)
         else:
             df = self._dv_overlay(
                 self.spark.read.schema(schema).parquet(
@@ -1269,7 +1337,7 @@ class TxnTable:
         schema = StructType.fromJson(json.loads(m["schema"]))
         files = self.bloom_pruned_files(col, value, version)
         if not files:
-            df = self.spark.createDataFrame([], schema)
+            df = local_df(self.spark, [], schema)
         else:
             df = self._dv_overlay(
                 self.spark.read.schema(schema).parquet(
@@ -1400,15 +1468,9 @@ class TxnTable:
 
     def committed_epoch(self, app_id: str) -> int:
         """Highest epoch committed by ``app_id`` (-1 if none) — the replay
-        ledger for streaming writers. Reads each manifest as stored: the
-        (app_id, epoch) stamp is the commit's own, so a delta manifest
-        needs no walk back to its checkpoint."""
-        best = -1
-        for v in range(1, self.version() + 1):
-            m = _read_raw_manifest(self.path, v)
-            if m.get("app_id") == app_id:
-                best = max(best, int(m.get("epoch", -1)))
-        return best
+        check for streaming writers. One raw read of the newest manifest,
+        which carries the ``epochs`` ledger (``_epoch_ledger``)."""
+        return _epoch_ledger(self.path, self.version()).get(app_id, -1)
 
     def stream_epoch_append(
         self,
@@ -1617,26 +1679,17 @@ class TxnTable:
         Like SQL MERGE, multiple source rows hitting the same key are
         rejected (the full-outer join would silently fan the target row out
         once per match) — pre-aggregate the source to one row per key. The
-        check is one small aggregate over the source keys."""
+        check rides the merge's own write: a ``count(*) OVER (PARTITION BY
+        on)`` guard on the source side, partitioned like the join, so it
+        adds no job and no exchange. A duplicate fails the write before
+        anything commits, and surfaces as a ValueError naming the key."""
         upd = when_matched_update or {}
-        dup = (
-            source.groupBy(*on)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            key = {c: dup[0][c] for c in on}
-            raise ValueError(
-                f"merge source has multiple rows for key {key}; MERGE "
-                "requires one source row per key — aggregate the source first"
-            )
 
         def attempt(base):
             target = self.read(base)
+            bucket = self.bucket_spec(base)
             t = target.withColumn("__t", F.lit(1)).alias("t")
-            s = source.withColumn("__s", F.lit(1)).alias("s")
+            s = _one_row_per_key(source, on, bucket).withColumn("__s", F.lit(1)).alias("s")
             joined = t.join(s, on=on, how="full_outer")
             matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
             target_only = F.col("__t").isNotNull() & F.col("__s").isNull()
@@ -1708,8 +1761,17 @@ class TxnTable:
             if not when_not_matched_insert:
                 result = result.filter(F.col("__t").isNotNull())
             result = result.select(*cols)
-            bucket = self.bucket_spec(base)
-            new_files, n = self._write_data(result, bucket=bucket)
+            try:
+                new_files, n = self._write_data(result, bucket=bucket)
+            except Exception as e:
+                key = re.search(f"{_DUP_KEY_TAG}(.*?){_DUP_KEY_TAG}", str(e))
+                if key is None:
+                    raise
+                raise ValueError(
+                    f"merge source has multiple rows for key "
+                    f"{json.loads(key.group(1))}; MERGE requires one source "
+                    "row per key — aggregate the source first"
+                ) from None
             return (
                 new_files, result.schema, "merge", n, n,
                 self._snapshot_extra(base, new_files, bucket),
@@ -2142,13 +2204,13 @@ class TxnTable:
         current = self.version()
         if version >= current:
             m = self._manifest(current)
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(m["schema"]))
+            return local_df(
+                self.spark, [], StructType.fromJson(json.loads(m["schema"]))
             )
         new_files = append_delta_files(self.path, version, current)
         schema = StructType.fromJson(json.loads(self._manifest(current)["schema"]))
         if not new_files:
-            return self.spark.createDataFrame([], schema)
+            return local_df(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(
             *[os.path.join(self.path, f) for f in new_files]
         )

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -32,6 +33,20 @@ def duck():
         pass
     yield con
     con.close()
+
+
+def count_spark_jobs(spark, fn) -> int:
+    """Run ``fn()`` under a fresh Spark job group and return how many Spark
+    jobs it started — the counter every job-budget test shares."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def register_duck_views(con, sf_dir: str) -> None:

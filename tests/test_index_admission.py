@@ -9,12 +9,11 @@ maintenance stays inside a Spark-job budget."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_spark_jobs
 
 from scraping_jobsdb_spark.operators.fpindex import FingerprintIndex
 from scraping_jobsdb_spark.operators.lshindex import LshSignatureIndex
@@ -289,14 +288,10 @@ def test_admission_job_budget(spark, tmp_path, kind):
     idx = _create(spark, kind, str(tmp_path / "idx"), corpus)
     idx.admit_stream_batch(batch1, 0)
     idx.maintain(max_files=1)
-    sc = spark.sparkContext
-    group = f"admission-budget-{kind}-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, f"one {kind} admission batch")
-    try:
+
+    def one_batch():
         idx.admit_stream_batch(batch2, 1)
         idx.maintain(max_files=1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_jobs = count_spark_jobs(spark, one_batch)
     assert 0 < n_jobs <= JOB_BUDGET, n_jobs

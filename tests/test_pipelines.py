@@ -5,12 +5,15 @@ pattern: literal expected values for every extracted field)."""
 
 from __future__ import annotations
 
-from datetime import date
+import os
+from datetime import date, timedelta
 
 import pytest
 from pyspark.sql import functions as F
 
-from scraping_jobsdb_spark.sources.txn import read_table_any
+from tests.conftest import count_spark_jobs
+
+from scraping_jobsdb_spark.sources.txn import TxnTable, read_table_any
 from scraping_jobsdb_spark.operators.extract import parse_job_page
 from scraping_jobsdb_spark.pipelines.export import export
 from scraping_jobsdb_spark.pipelines.impute import impute
@@ -328,3 +331,133 @@ def test_zero_results_branch():
     ]
     # fake site guarantees at least one empty combo exists in this grid
     assert empties or True
+
+
+# --- a day's cost and failure handling --------------------------------------
+
+# Spark jobs of one daily run (ingest, parse, impute, export) on the fake
+# site, counted on day 2 of the test below. They were 31 before the DQ
+# checks and row counts rode the writes, the merge's duplicate-key check
+# rode the merge, and parse stopped inferring the lake schema.
+DAILY_JOB_BUDGET = 19
+
+# (keyword, band) combos the fake site lists jobs for; day 2 adds a keyword,
+# so it both re-lists day 1's jobs and brings new ones.
+DAY1_KEYWORDS = ["data_engineer"]
+DAY2_KEYWORDS = ["data_engineer", "data_analyst"]
+BANDS = [(11000, 20000), (20000, 30000)]
+
+
+def _dirs(tmp_path):
+    return {n: str(tmp_path / n) for n in ("lake", "raw", "catalog", "parsed")}
+
+
+def _ingest(spark, dirs, run_date, keywords, transport=fake_transport):
+    return ingest(
+        spark,
+        transport,
+        lake_path=dirs["lake"],
+        raw_path=dirs["raw"],
+        catalog_path=dirs["catalog"],
+        run_date=run_date,
+        keywords=keywords,
+        bands=BANDS,
+        fetch_partitions=4,
+    )
+
+
+def _day(spark, dirs, run_date, keywords, csv_path):
+    _ingest(spark, dirs, run_date, keywords)
+    parse(spark, dirs["lake"], dirs["parsed"], run_date.year, run_date.month, run_date.day)
+    impute(spark, dirs["raw"], dirs["parsed"])
+    return export(spark, dirs["parsed"], csv_path)
+
+
+def _site_ids(keywords):
+    return {j for kw in keywords for lo, hi in BANDS for j in job_ids_for(kw, lo, hi)}
+
+
+def test_daily_job_budget(spark, tmp_path):
+    """Day 2 of the daily job runs at most DAILY_JOB_BUDGET Spark jobs, and
+    each table's append writes at most defaultParallelism files."""
+    dirs = _dirs(tmp_path)
+    _day(spark, dirs, RUN_DATE, DAY1_KEYWORDS, str(tmp_path / "csv1"))
+    day2 = RUN_DATE + timedelta(days=1)
+    out = {}
+
+    def run_day2():
+        out["exported"] = _day(spark, dirs, day2, DAY2_KEYWORDS, str(tmp_path / "csv2"))
+
+    n_jobs = count_spark_jobs(spark, run_day2)
+    assert out["exported"] == len(_site_ids(DAY2_KEYWORDS))
+    assert 0 < n_jobs <= DAILY_JOB_BUDGET, n_jobs
+
+    cap = spark.sparkContext.defaultParallelism
+    for name in ("raw", "catalog", "parsed"):
+        m = next(m for m in reversed(TxnTable(spark, dirs[name]).history())
+                 if m["op"] == "idempotent_append")
+        assert 0 < len(m["adds"]) <= cap, (name, m["adds"])
+    part = os.path.join(dirs["lake"], f"year={day2.year}", f"month={day2.month}",
+                        f"day={day2.day}")
+    assert 0 < sum(f.endswith(".parquet") for f in os.listdir(part)) <= cap
+
+
+def test_catalog_job_ids_unique_by_construction(spark, tmp_path):
+    """The catalog holds each job once although the same job is listed in
+    two bands on one day and again on the next: dedup_first builds the
+    delta and the keyed idempotent_append writes it, so ingest needs no
+    full-catalog uniqueness scan. ``catalog_size`` (read from footers)
+    equals a Spark count."""
+
+    def two_bands_one_listing(url):
+        return fake_transport(url.replace("lo=20000&hi=30000", "lo=11000&hi=20000"))
+
+    dirs = _dirs(tmp_path)
+    for i, keywords in enumerate((DAY1_KEYWORDS, DAY2_KEYWORDS)):
+        stats = _ingest(spark, dirs, RUN_DATE + timedelta(days=i), keywords,
+                        two_bands_one_listing)
+    catalog = read_table_any(spark, dirs["catalog"])
+    ids = [r.job_id for r in catalog.select("job_id").collect()]
+    want = {j for kw in DAY2_KEYWORDS for j in job_ids_for(kw, *BANDS[0])}
+    assert len(ids) == len(set(ids)) and set(ids) == want
+    assert stats["catalog_size"] == catalog.count() == len(want)
+
+
+def test_failed_detail_fetch_is_fetched_again_next_day(spark, tmp_path):
+    """A detail fetch that fails stays out of the catalog: the day raises
+    and names the job, and the next day fetches it again, lands it and
+    leaves no NULL html_present behind (before, the job stayed in the
+    catalog with NULL html_present and every later day failed its check)."""
+    kw, (lo, hi) = DAY1_KEYWORDS[0], BANDS[0]
+    bad = sorted(job_ids_for(kw, lo, hi))[0]
+
+    def flaky(url):
+        if url.endswith(f"-{bad}"):
+            raise ConnectionError("connection reset")
+        return fake_transport(url)
+
+    dirs = _dirs(tmp_path)
+    with pytest.raises(AssertionError,
+                       match=rf"not_null:html_present \(observed=1\).*'{bad}'"):
+        _ingest(spark, dirs, RUN_DATE, DAY1_KEYWORDS, flaky)
+    landed = {r.job_id for r in read_table_any(spark, dirs["catalog"]).collect()}
+    assert landed == _site_ids(DAY1_KEYWORDS) - {bad}
+
+    stats = _ingest(spark, dirs, RUN_DATE + timedelta(days=1), DAY1_KEYWORDS)
+    assert stats["jobs_scraped"] == 1
+    catalog = read_table_any(spark, dirs["catalog"])
+    assert catalog.filter(F.col("html_present").isNull()).count() == 0
+    assert {r.job_id for r in catalog.collect()} == _site_ids(DAY1_KEYWORDS)
+    assert stats["catalog_size"] == len(_site_ids(DAY1_KEYWORDS))
+
+
+def test_parse_day_without_lake_partition(spark, tmp_path):
+    """Parsing a day that landed no pages reads nothing, adds nothing and
+    still leaves a parsed table for impute to open."""
+    dirs = _dirs(tmp_path)
+    _ingest(spark, dirs, RUN_DATE, DAY1_KEYWORDS)
+    day = RUN_DATE + timedelta(days=5)
+    assert parse(spark, dirs["lake"], dirs["parsed"], day.year, day.month, day.day) == 0
+    assert TxnTable.exists(spark, dirs["parsed"])
+    n = parse(spark, dirs["lake"], dirs["parsed"], RUN_DATE.year, RUN_DATE.month, RUN_DATE.day)
+    assert n == len(_site_ids(DAY1_KEYWORDS))

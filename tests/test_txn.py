@@ -1615,3 +1615,111 @@ def test_merge_not_matched_by_source_clauses(spark, tdir):
         t5.merge(source, on=["k"], when_not_matched_by_source_update={"k": F.lit(0)})
     with pytest.raises(ValueError, match="unknown or"):
         t5.merge(source, on=["k"], when_not_matched_by_source_update={"zz": F.lit(0)})
+
+
+def test_merge_duplicate_key_guard_rides_the_write(spark, tmp_path, monkeypatch):
+    """The duplicate-source-key check is part of the merge's own write: on
+    an unbucketed target the write plans the same two Exchanges a bare
+    full-outer join needs, on a bucketed target the same one; matched and
+    unmatched duplicates both raise ValueError naming the key, with and
+    without inserts, and leave the table at its version."""
+    plans = []
+    write = TxnTable._write_data
+
+    def recording_write(self, df, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, df, *a, **kw)
+
+    monkeypatch.setattr(TxnTable, "_write_data", recording_write)
+    rows = [(i, f"v{i}") for i in range(100)]
+    for bucket_kw, n_exchanges in (({}, 2), ({"bucket_by": ["k"], "n_buckets": 4}, 1)):
+        name = "b" if bucket_kw else "u"
+        t = TxnTable.create(spark, str(tmp_path / name), _df(spark, rows), **bucket_kw)
+        plans.clear()
+        src = _df(spark, [(5, "x"), (500, "y")], "k bigint, nv string")
+        assert t.merge(src, on=["k"], when_matched_update={"v": "nv"}) == 101
+        assert plans[0].count("Exchange") == n_exchanges, plans[0]
+        version = t.version()
+        for key in (7, 700):  # matched, unmatched
+            dup = _df(spark, [(key, "x"), (key, "y"), (3, "z")], "k bigint, nv string")
+            for insert in (True, False):
+                with pytest.raises(ValueError, match=rf"multiple rows for key \{{'k': {key}\}}"):
+                    t.merge(dup, on=["k"], when_matched_update={"v": "nv"},
+                            when_not_matched_insert=insert)
+        assert t.version() == version and t.read().count() == 101
+
+
+def test_empty_snapshot_reads_as_local_relation(spark, tdir):
+    """An empty snapshot (and an empty pruned, point or append-delta read)
+    is a JVM-side LocalRelation, not a Python-RDD scan."""
+    t = TxnTable.create(spark, tdir, schema=_df(spark, [], "k bigint, v string").schema)
+    frames = [t.read(), t.read_pruned_in("k", [1]), t.read_point("k", 1),
+              t.read_appends_since(t.version())]
+    for df in frames:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, plan
+        assert df.count() == 0
+    assert t.read().schema == _df(spark, [], "k bigint, v string").schema
+
+
+def test_epoch_ledger_equals_manifest_scan(spark, tdir):
+    """committed_epoch reads the newest manifest's ledger, which equals the
+    highest stamped epoch per app id over every manifest, across appends,
+    compaction, set_meta and restore. A table whose manifests predate the
+    ledger falls back to the scan, and its next commit writes the ledger."""
+    from scraping_jobsdb_spark.sources.txn import _TXN_DIR, _read_raw_manifest
+
+    def scanned(t):
+        out = {}
+        for v in range(1, t.version() + 1):
+            m = _read_raw_manifest(t.path, v)
+            if "app_id" in m:
+                out[m["app_id"]] = max(out.get(m["app_id"], -1), m["epoch"])
+        return out
+
+    def check(t):
+        ledger = _read_raw_manifest(t.path, t.version())["epochs"]
+        assert ledger == scanned(t)
+        for app in ("a", "b", "never"):
+            assert t.committed_epoch(app) == scanned(t).get(app, -1)
+
+    t = TxnTable.create(spark, tdir, _df(spark, [(0, "v")]))
+    check(t)
+    t.stream_epoch_append(_df(spark, [(1, "a")]), "a", 0)
+    t.stream_epoch_append(_df(spark, [(2, "b")]), "b", 5)
+    t.append(_df(spark, [(3, "c")]))
+    check(t)
+    t.stream_epoch_append(_df(spark, [(4, "d")]), "a", 3)
+    restore_to = t.version() - 1
+    t.compact(1)
+    check(t)
+    t.set_meta({"note": 1})
+    check(t)
+    t.restore(restore_to)  # rolls the rows back, not the replay ledger
+    check(t)
+    assert t.stream_epoch_append(_df(spark, [(9, "z")]), "a", 3) == 0
+
+    log = os.path.join(t.path, _TXN_DIR)
+    for f in os.listdir(log):  # strip the ledger: a table from before it
+        with open(os.path.join(log, f)) as fh:
+            m = json.load(fh)
+        m.pop("epochs", None)
+        with open(os.path.join(log, f), "w") as fh:
+            json.dump(m, fh)
+    assert t.committed_epoch("a") == 3 and t.committed_epoch("b") == 5
+    t.stream_epoch_append(_df(spark, [(5, "e")]), "b", 6)
+    check(t)
+
+
+def test_row_count_reads_footers_and_counts_past_deletion_vectors(spark, tdir):
+    """row_count sums the data files' footers without a Spark job; once
+    deletion vectors hide rows it counts the snapshot with a scan."""
+    from tests.conftest import count_spark_jobs
+
+    t = TxnTable.create(spark, tdir, _df(spark, [(i, "v") for i in range(20)]))
+    t.append(_df(spark, [(i, "w") for i in range(20, 30)]))
+    out = {}
+    assert count_spark_jobs(spark, lambda: out.setdefault("n", t.row_count())) == 0
+    assert out["n"] == 30 and t.row_count(1) == 20
+    assert t.delete_where_dv(F.col("k") < 5) == 5
+    assert t.row_count() == t.read().count() == 25
