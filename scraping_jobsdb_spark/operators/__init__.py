@@ -3,7 +3,7 @@
 from scraping_jobsdb_spark.operators.dedup import dedup_exact, dedup_first
 from scraping_jobsdb_spark.operators.incremental import new_rows
 from scraping_jobsdb_spark.operators.merge import coalesce_merge
-from scraping_jobsdb_spark.operators.checks import CheckResult, run_checks
+from scraping_jobsdb_spark.operators.checks import CheckResult
 
 __all__ = [
     "dedup_exact",
@@ -11,5 +11,4 @@ __all__ = [
     "new_rows",
     "coalesce_merge",
     "CheckResult",
-    "run_checks",
 ]

@@ -3,9 +3,10 @@
 Port of the reference's ``SQLColumnCheckOperator`` sanity task
 (``airflow/dags/scrape_url.py:424-436``): job_id uniqueness, scraped_date
 within bounds, zero NULL file_path — plus its fail-loud runtime raises
-(``scrape_url.py:276-277, 289-290``). The engine computes *all* checks in one
-aggregate pass (single job, tiny collected scalar row) and raises on
-violation, mirroring the DAG-failure semantics.
+(``scrape_url.py:276-277, 289-290``). The engine takes its check values as
+``observed`` metrics on the job that writes the data (no separate checking
+pass) and ``raise_failed`` raises on violation, mirroring the DAG-failure
+semantics.
 """
 
 from __future__ import annotations
@@ -17,11 +18,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "CheckResult",
-    "run_checks",
     "raise_failed",
-    "unique_check",
-    "null_check",
-    "bounds_check",
     "observed",
     "ObservationHandle",
     "k_anonymity_report",
@@ -36,48 +33,9 @@ class CheckResult:
     observed: object
 
 
-def unique_check(col: str) -> tuple[str, Column, Column]:
-    """count(*) == count(distinct col) → no duplicate keys."""
-    obs = (F.count(F.lit(1)) - F.countDistinct(F.col(col))).alias(f"dup_{col}")
-    return (f"unique:{col}", obs, obs == 0)
-
-
-def null_check(col: str) -> tuple[str, Column, Column]:
-    """Zero NULLs in col (the reference's file_path null-count check)."""
-    obs = F.sum(F.col(col).isNull().cast("int")).alias(f"nulls_{col}")
-    return (f"not_null:{col}", obs, obs == 0)
-
-
-def bounds_check(col: str, lo, hi) -> tuple[str, Column, Column]:
-    """min/max of col within [lo, hi] (the scraped_date window check)."""
-    obs = F.struct(F.min(col).alias("lo"), F.max(col).alias("hi")).alias(f"bounds_{col}")
-    ok = (F.min(col) >= F.lit(lo)) & (F.max(col) <= F.lit(hi))
-    return (f"bounds:{col}", obs, ok)
-
-
-def run_checks(
-    df: DataFrame, checks: list[tuple[str, Column, Column]], raise_on_fail: bool = True
-) -> list[CheckResult]:
-    """Evaluate all checks in ONE aggregation (one pass over the data, one
-    tiny row collected). Raises AssertionError listing every failed check."""
-    agg_cols = []
-    for i, (name, obs, ok) in enumerate(checks):
-        agg_cols.append(obs.alias(f"__obs_{i}"))
-        agg_cols.append(ok.alias(f"__ok_{i}"))
-    row = df.agg(*agg_cols).collect()[0]
-    results = [
-        CheckResult(name, bool(row[f"__ok_{i}"]), row[f"__obs_{i}"])
-        for i, (name, _, _) in enumerate(checks)
-    ]
-    if raise_on_fail:
-        raise_failed(results)
-    return results
-
-
 def raise_failed(results: list[CheckResult], detail: str = "") -> None:
     """Raise AssertionError listing every failed check (then ``detail``),
-    the one failure message for checks computed by ``run_checks`` and for
-    checks read off ``observed`` metrics."""
+    the one failure message for checks read off ``observed`` metrics."""
     failed = [r for r in results if not r.passed]
     if failed:
         raise AssertionError(
@@ -92,8 +50,8 @@ def observed(
 ) -> tuple[DataFrame, "ObservationHandle"]:
     """Attach in-flight metrics to a DataFrame with ``df.observe``.
 
-    Unlike ``run_checks`` (a separate aggregation pass), observed metrics
-    ride the SAME job that materializes the frame — zero extra scans, the
+    Unlike a separate aggregation pass, observed metrics ride the SAME job
+    that materializes the frame — zero extra scans, the
     right DQ shape for a 100 TB write where a second pass doubles the bill.
     Returns (observed_df, handle); after ANY action on the observed frame,
     ``handle.get()`` returns the metric row as a dict.

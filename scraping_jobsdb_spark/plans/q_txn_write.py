@@ -320,9 +320,9 @@ def q_dq_bounds_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5, zero-extra-pass form: DQ metrics ride the SAME job as the real
     aggregate via ``df.observe`` (operators/checks.py:observed) — at 100 TB a
     separate checking pass doubles the scan bill, so the engine's canonical
-    DQ shape is in-flight observation. The bounds/null assertions
-    (bounds_check semantics on o_totalprice, null_check on o_custkey) raise
-    on violation after the action; the returned frame is the per-status
+    DQ shape is in-flight observation. The bounds assertion on
+    o_totalprice and the null assertion on o_custkey raise on violation
+    after the action; the returned frame is the per-status
     rollup the job computed."""
     import uuid as _uuid
 

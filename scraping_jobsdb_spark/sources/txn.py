@@ -45,7 +45,7 @@ import os
 import re
 import shutil
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -407,6 +407,40 @@ def _manifest_name(version: int) -> str:
     return f"v{version:010d}.json"
 
 
+def _schema_of(m: dict[str, Any]) -> StructType:
+    return StructType.fromJson(json.loads(m["schema"]))
+
+
+def _as_col(e: Column | str) -> Column:
+    """A predicate or SET expression given as a Column or SQL text."""
+    return F.expr(e) if isinstance(e, str) else e
+
+
+def _set_columns(
+    op: str, schema: StructType, set_exprs: dict[str, Column | str],
+    hit: Column | None = None,
+) -> list[Column]:
+    """An UPDATE's projection: each ``set_exprs`` target replaced by its
+    expression cast to the column's table type (only where ``hit`` holds,
+    when given), every other column carried. Unknown targets raise."""
+    unknown = [c for c in set_exprs if c not in schema.fieldNames()]
+    if unknown:
+        raise ValueError(
+            f"{op}: SET targets {unknown} not in table "
+            f"schema {sorted(schema.fieldNames())}"
+        )
+    cols = []
+    for f in schema.fields:
+        if f.name not in set_exprs:
+            cols.append(F.col(f.name))
+            continue
+        e = _as_col(set_exprs[f.name]).cast(f.dataType)
+        if hit is not None:
+            e = F.when(hit, e).otherwise(F.col(f.name))
+        cols.append(e.alias(f.name))
+    return cols
+
+
 class TxnTable:
     """A versioned Parquet table rooted at ``path`` (see module docstring)."""
 
@@ -414,6 +448,10 @@ class TxnTable:
         self.spark = spark
         self.path = os.path.abspath(path)
         self._log = os.path.join(self.path, _TXN_DIR)
+        # the base manifest of the write attempt in flight (see _occ_loop);
+        # it answers only for its own version, whose manifest never changes,
+        # so a stale value is never wrong
+        self._attempt_base: dict[str, Any] | None = None
 
     # ------------------------------------------------------------------ log
 
@@ -596,17 +634,17 @@ class TxnTable:
         return self._manifest(version).get("bucket")
 
     def _stats_extra(
-        self, base: int, new_files: list[str], keep_base: bool = True
+        self, m: dict[str, Any] | None, new_files: list[str], keep_base: bool = True
     ) -> dict[str, Any]:
-        """Stats + bloom metadata for the next commit: base entries carried
-        for files that survive (appends), dropped for whole-snapshot
-        rewrites. Every write path funnels through here, so declared
-        min/max stats AND bloom filters stay maintained across
-        append/overwrite/merge/compact without per-op code."""
-        if base == 0:
+        """Stats + bloom metadata for the commit over base manifest ``m``
+        (None: no base): base entries carried for files that survive
+        (appends), dropped for whole-snapshot rewrites. Every write path
+        funnels through here, so declared min/max stats AND bloom filters
+        stay maintained across append/overwrite/merge/compact without
+        per-op code."""
+        if m is None:
             return {}
-        out = dict(self._bloom_extra(base, new_files, keep_base))
-        m = self._manifest(base)
+        out = self._bloom_extra(m, new_files, keep_base)
         if keep_base and m.get("dvs"):
             # deletion vectors ride the manifest like stats: appends carry
             # them (new files have none), rewrites drop them (the rewrite
@@ -669,6 +707,9 @@ class TxnTable:
 
     def _manifest(self, version: int | None = None) -> dict[str, Any]:
         v = version if version is not None else self.version()
+        held = self._attempt_base
+        if held is not None and held["version"] == v:
+            return held  # a committed version's manifest never changes
         return read_manifest(self.path, v)
 
     def history(self) -> list[dict[str, Any]]:
@@ -957,15 +998,12 @@ class TxnTable:
         return out
 
     def _bloom_extra(
-        self, base: int, new_files: list[str], keep_base: bool = True
+        self, m: dict[str, Any], new_files: list[str], keep_base: bool = True
     ) -> dict[str, Any]:
-        """Bloom metadata for the next commit, mirroring ``_stats_extra``:
-        config carried from the base manifest, filters computed for the new
-        files, base files' filters kept for appends and dropped for
+        """Bloom metadata for the commit over base manifest ``m``, mirroring
+        ``_stats_extra``: config carried from the base, filters computed for
+        the new files, base files' filters kept for appends and dropped for
         whole-snapshot rewrites."""
-        if base == 0:
-            return {}
-        m = self._manifest(base)
         cols = m.get("bloom_cols") or []
         if not cols:
             return {}
@@ -1000,64 +1038,45 @@ class TxnTable:
         DELTA ("adds"); every ``_CHECKPOINT_INTERVAL``-th version and every
         whole-snapshot rewrite stores the complete list, bounding both
         per-commit manifest size and read-side resolution depth."""
+        import time
+
         os.makedirs(self._log, exist_ok=True)
         rel_files = [os.path.relpath(f, self.path) for f in files]
         extra = dict(extra or {})
-        present = set(rel_files)
-        for per_file_key in ("file_stats", "file_blooms", "dvs"):
-            if per_file_key in extra:
-                extra[per_file_key] = {
-                    f: s for f, s in extra[per_file_key].items() if f in present
-                }
-        if not extra.get("dvs", {"_": 1}):
-            extra.pop("dvs", None)  # drop an emptied map entirely
         epochs = _epoch_ledger(self.path, base_version)
         if "app_id" in extra:
             app = extra["app_id"]
             epochs[app] = max(epochs.get(app, -1), int(extra["epoch"]))
         extra["epochs"] = epochs
-        import time
-
-        committed_at = time.time()
-        manifest = {
-            "version": base_version + 1,
-            "files": rel_files,
-            "schema": schema.json(),
-            "op": op,
-            "n_rows": n_rows,
-            "committed_at": committed_at,
-            **extra,
-        }
+        listed = {"files": rel_files}
         if (
             op in APPEND_OPS
             and base_version >= 1
             and (base_version + 1) % self._checkpoint_interval() != 0
         ):
-            base_files = read_manifest(self.path, base_version)["files"]
+            base_files = self._manifest(base_version)["files"]
             # appends only ever extend the base list in place; anything else
             # (defensive) keeps the full-manifest form
             if rel_files[: len(base_files)] == base_files:
-                adds = rel_files[len(base_files):]
-                manifest = {
-                    "version": base_version + 1,
-                    "adds": adds,
-                    "delta_base": base_version,
-                    "schema": schema.json(),
-                    "op": op,
-                    "n_rows": n_rows,
-                    "committed_at": committed_at,
-                    **extra,
+                listed = {"adds": rel_files[len(base_files):], "delta_base": base_version}
+        manifest = {
+            "version": base_version + 1,
+            **listed,
+            "schema": schema.json(),
+            "op": op,
+            "n_rows": n_rows,
+            "committed_at": time.time(),
+            **extra,
+        }
+        # per-file entries only for the files this manifest lists
+        present = set(listed.get("adds", rel_files))
+        for per_file_key in ("file_stats", "file_blooms", "dvs"):
+            if per_file_key in extra:
+                manifest[per_file_key] = {
+                    f: s for f, s in extra[per_file_key].items() if f in present
                 }
-                add_set = set(adds)
-                for per_file_key in ("file_stats", "file_blooms", "dvs"):
-                    if per_file_key in extra:
-                        manifest[per_file_key] = {
-                            f: s
-                            for f, s in extra[per_file_key].items()
-                            if f in add_set
-                        }
-                if not manifest.get("dvs", {"_": 1}):
-                    manifest.pop("dvs", None)
+        if not manifest.get("dvs", {"_": 1}):
+            manifest.pop("dvs", None)  # drop an emptied map entirely
         scratch = os.path.join(self._log, f".tmp-{uuid.uuid4().hex}.json")
         with open(scratch, "w") as fh:
             json.dump(manifest, fh)
@@ -1071,6 +1090,27 @@ class TxnTable:
             os.unlink(scratch)
 
     # ---------------------------------------------------------------- reads
+
+    def _scan(
+        self, m: dict[str, Any], files: list[str], tags: dict[str, str] | None = None
+    ) -> DataFrame:
+        """The rows of manifest ``m``'s ``files`` (relative paths) under its
+        schema, deletion vectors overlaid: every unbucketed read and write
+        scan goes through here. ``tags`` adds ``{alias: _metadata field}``
+        columns, taken before the overlay (after its join, the metadata of
+        the scan is no longer addressable). No files: an empty
+        ``LocalRelation`` (without tags), so an empty read runs no job."""
+        schema = _schema_of(m)
+        if not files:
+            return local_df(self.spark, [], schema)
+        df = self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, f) for f in files]
+        )
+        if tags:
+            df = df.select(
+                "*", *[F.col(f"_metadata.{k}").alias(a) for a, k in tags.items()]
+            )
+        return self._dv_overlay(df, m, files)
 
     def _dv_overlay(
         self, df: DataFrame, m: dict[str, Any], scanned: list[str]
@@ -1147,15 +1187,9 @@ class TxnTable:
         the scan carries the bucket distribution into the planner.
         Deletion vectors, if any, overlay transparently (merge-on-read)."""
         m = self._manifest(version)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        files = [os.path.join(self.path, f) for f in m["files"]]
-        if not files:
-            return local_df(self.spark, [], schema)
-        bucket = m.get("bucket")
-        if bucket:
-            return self._read_bucketed(m, schema, bucket)
-        df = self.spark.read.schema(schema).parquet(*files)
-        return self._dv_overlay(df, m, m["files"])
+        if m.get("bucket") and m["files"]:
+            return self._read_bucketed(m)
+        return self._scan(m, m["files"])
 
     def row_count(self, version: int | None = None) -> int:
         """Rows in the snapshot as of ``version``, summed from the data
@@ -1169,9 +1203,7 @@ class TxnTable:
                 return n
         return self.read(version).count()
 
-    def _read_bucketed(
-        self, m: dict[str, Any], schema: StructType, bucket: dict[str, Any]
-    ) -> DataFrame:
+    def _read_bucketed(self, m: dict[str, Any]) -> DataFrame:
         """Register (once per session) an external bucketed table over the
         snapshot's data directory and read through it. Only a catalog table
         can carry a bucket spec in Spark, so this is the one place the
@@ -1179,6 +1211,7 @@ class TxnTable:
         (table path, version) and the registration is metadata-only."""
         import hashlib
 
+        bucket = m["bucket"]
         loc = os.path.join(self.path, bucket["dir"])
         tag = hashlib.md5(f"{self.path}@{m['version']}".encode()).hexdigest()[:12]
         name = f"sjs_txn_snap_{tag}"
@@ -1186,7 +1219,7 @@ class TxnTable:
         # definition is a pure function of the manifest, so concurrent readers
         # racing past a tableExists() check must not throw TableAlreadyExists.
         ddl_cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+            f"`{f.name}` {f.dataType.simpleString()}" for f in _schema_of(m).fields
         )
         bcols = ", ".join(f"`{c}`" for c in bucket["cols"])
         self.spark.sql(
@@ -1204,7 +1237,10 @@ class TxnTable:
         are always kept — pruning is only ever an optimization). A file whose
         stats are [null, null] (all-null column) is skipped: a range
         predicate never matches NULL."""
-        m = self._manifest(version)
+        return self._range_kept(self._manifest(version), col, lo, hi)
+
+    @staticmethod
+    def _range_kept(m: dict[str, Any], col: str, lo, hi) -> list[str]:
         stats = m.get("file_stats") or {}
         kept = []
         for f in m["files"]:
@@ -1249,22 +1285,9 @@ class TxnTable:
         identical."""
         vals = sorted(set(values))
         m = self._manifest(version)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        kept_set: set = set()
-        for v in vals:
-            kept_set.update(self.pruned_files(col, v, v, version))
-        files = [f for f in m["files"] if f in kept_set]
-        if not files:
-            df = local_df(self.spark, [], schema)
-        else:
-            df = self._dv_overlay(
-                self.spark.read.schema(schema).parquet(
-                    *[os.path.join(self.path, f) for f in files]
-                ),
-                m,
-                files,
-            )
-        return df.filter(F.col(col).isin(vals))
+        kept = {f for v in vals for f in self._range_kept(m, col, v, v)}
+        files = [f for f in m["files"] if f in kept]
+        return self._scan(m, files).filter(F.col(col).isin(vals))
 
     def read_pruned_all(
         self, predicates: dict[str, tuple], version: int | None = None
@@ -1278,21 +1301,10 @@ class TxnTable:
         Exactly equivalent to ``read().filter(AND ...)``; the predicates
         are still applied after the scan."""
         m = self._manifest(version)
-        schema = StructType.fromJson(json.loads(m["schema"]))
         kept = set(m["files"])
         for col, (lo, hi) in predicates.items():
-            kept &= set(self.pruned_files(col, lo, hi, version))
-        files = [f for f in m["files"] if f in kept]
-        if not files:
-            df = local_df(self.spark, [], schema)
-        else:
-            df = self._dv_overlay(
-                self.spark.read.schema(schema).parquet(
-                    *[os.path.join(self.path, f) for f in files]
-                ),
-                m,
-                files,
-            )
+            kept &= set(self._range_kept(m, col, lo, hi))
+        df = self._scan(m, [f for f in m["files"] if f in kept])
         for col, (lo, hi) in predicates.items():
             if lo is not None:
                 df = df.filter(F.col(col) >= lo)
@@ -1310,7 +1322,10 @@ class TxnTable:
         writes give every file a full-range min/max, useless to a range
         index, while the bloom pins the key to the files that actually
         contain it (plus the filter's false-positive rate)."""
-        m = self._manifest(version)
+        return self._bloom_kept(self._manifest(version), col, value)
+
+    @staticmethod
+    def _bloom_kept(m: dict[str, Any], col: str, value: Any) -> list[str]:
         blooms = m.get("file_blooms") or {}
         if col not in (m.get("bloom_cols") or []):
             return list(m["files"])
@@ -1334,44 +1349,40 @@ class TxnTable:
         files. Exactly equivalent to ``read().filter(col == value)`` —
         the equality predicate is still applied after the skip."""
         m = self._manifest(version)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        files = self.bloom_pruned_files(col, value, version)
-        if not files:
-            df = local_df(self.spark, [], schema)
-        else:
-            df = self._dv_overlay(
-                self.spark.read.schema(schema).parquet(
-                    *[os.path.join(self.path, f) for f in files]
-                ),
-                m,
-                files,
-            )
-        return df.filter(F.col(col) == value)
+        return self._scan(m, self._bloom_kept(m, col, value)).filter(F.col(col) == value)
 
     # --------------------------------------------------------------- writes
 
     _MAX_RETRIES = 10
 
     def _occ_loop(self, attempt_fn) -> Any:
-        """Run ``attempt_fn(base_version)`` until its commit lands.
-        attempt_fn returns (files, schema, op, n_rows, result) with an
-        optional sixth ``extra`` manifest-metadata element, or None to abort
-        with no commit (no-op)."""
+        """Run ``attempt_fn(base, m)`` until its commit lands. ``m`` is the
+        base version's manifest (None before the first commit), resolved
+        ONCE per attempt: while the attempt runs, ``_manifest(base)`` — and
+        so ``read(base)`` and ``_commit``'s delta check — returns it without
+        walking the log again. attempt_fn returns (files, schema, op,
+        n_rows, result) with an optional sixth ``extra`` manifest-metadata
+        element, or None to abort with no commit (no-op)."""
         for _ in range(self._MAX_RETRIES):
             base = self.version()
-            prepared = attempt_fn(base)
-            if prepared is None:
-                return None
-            files, schema, op, n_rows, result, *rest = prepared
-            extra = rest[0] if rest else None
-            if self._commit(base, files, schema, op, n_rows, extra=extra):
-                return result
+            m = self._attempt_base = self._manifest(base) if base else None
+            try:
+                prepared = attempt_fn(base, m)
+                if prepared is None:
+                    return None
+                files, schema, op, n_rows, result, *rest = prepared
+                extra = rest[0] if rest else None
+                if self._commit(base, files, schema, op, n_rows, extra=extra):
+                    return result
+            finally:
+                self._attempt_base = None
             # lost the race: leave the orphaned data files to vacuum() and
             # recompute against the winner's snapshot
         raise TxnConflict(f"{self.path}: commit contention, gave up")
 
-    def _require_unbucketed(self, op: str) -> None:
-        if self.bucket_spec() is not None:
+    @staticmethod
+    def _require_unbucketed(op: str, m: dict[str, Any] | None) -> None:
+        if m and m.get("bucket") is not None:
             raise ValueError(
                 f"{op} on a bucketed txn table would emit files outside the "
                 "bucket layout and break co-partitioned reads; use merge()/"
@@ -1380,19 +1391,90 @@ class TxnTable:
             )
 
     def _snapshot_extra(
-        self, base: int, new_files: list[str], bucket: dict[str, Any] | None
+        self, m: dict[str, Any] | None, new_files: list[str]
     ) -> dict[str, Any]:
-        """Manifest extras for a whole-snapshot rewrite: fresh file stats,
-        plus the bucket spec re-pointed at the new data directory."""
-        extra = self._stats_extra(base, new_files, keep_base=False)
+        """Manifest extras for a whole-snapshot rewrite over base manifest
+        ``m``: fresh file stats, plus the bucket spec re-pointed at the new
+        data directory."""
+        extra = self._stats_extra(m, new_files, keep_base=False)
+        bucket = m.get("bucket") if m else None
         if bucket:
-            extra = {
-                **extra,
-                "bucket": self._bucket_with_dir(
-                    {"cols": bucket["cols"], "n": bucket["n"]}, new_files
-                ),
-            }
+            extra["bucket"] = self._bucket_with_dir(
+                {"cols": bucket["cols"], "n": bucket["n"]}, new_files
+            )
         return extra
+
+    def _append(
+        self,
+        op: str,
+        df: DataFrame,
+        key_cols: list[str] | None = None,
+        evolve_schema: bool = False,
+        stamp: dict[str, Any] | None = None,
+    ) -> int:
+        """The append family's one write path (``append``,
+        ``idempotent_append``, ``stream_epoch_append``), run inside the OCC
+        loop against the base snapshot:
+
+        1. a ``stamp`` ({app_id, epoch}) already in the base's epoch ledger
+           makes the call a no-op (a replayed micro-batch);
+        2. the frame is aligned to the table schema: extra columns evolve
+           it, missing ones raise unless ``evolve_schema`` null-fills them;
+        3. with ``key_cols``, rows whose key the snapshot already holds are
+           dropped: the ONE existing-key anti-join. It runs inside the
+           loop, so a concurrent winner's rows are excluded on retry;
+        4. the frame is written and the base files plus the new ones
+           commit, with stats, blooms and deletion vectors carried and the
+           stamp recorded. An ``idempotent_append`` that adds no row
+           commits nothing; every other op commits even an empty frame (a
+           stream epoch is stamped either way).
+
+        Cost: one write job, plus the anti-join's scan of the whole
+        snapshot when ``key_cols`` are given, plus one per-file aggregate
+        over the NEW files only for declared stats or blooms. Returns the
+        rows appended (0 for a no-op)."""
+
+        def attempt(base, m):
+            if m is None:
+                raise FileNotFoundError(f"{self.path}: no committed snapshot")
+            self._require_unbucketed(op, m)
+            if stamp and _epoch_ledger(self.path, base).get(
+                stamp["app_id"], -1
+            ) >= stamp["epoch"]:
+                return None  # replayed batch: already committed
+            data, have = df, set(df.columns)
+            table = _schema_of(m).fields
+            missing = [f.name for f in table if f.name not in have]
+            if missing and not evolve_schema:
+                raise ValueError(
+                    f"{self.path}: {op} frame lacks table columns {missing}; "
+                    "append(evolve_schema=True) null-fills them"
+                )
+            if missing:
+                # table columns first (nulls where df lacks them), then
+                # df-only columns appended in df order — the evolved
+                # committed schema
+                named = {f.name for f in table}
+                data = df.select(
+                    *[
+                        F.col(f.name) if f.name in have
+                        else F.lit(None).cast(f.dataType).alias(f.name)
+                        for f in table
+                    ],
+                    *[F.col(c) for c in df.columns if c not in named],
+                )
+            schema = data.schema
+            if key_cols:
+                existing = self._scan(m, m["files"]).select(*key_cols)
+                data = data.join(existing, on=key_cols, how="left_anti")
+            new_files, n = self._write_data(data)
+            if n == 0 and op == "idempotent_append":
+                return None  # every row already present: no commit
+            files = [os.path.join(self.path, f) for f in m["files"]] + new_files
+            extra = {**self._stats_extra(m, new_files), **(stamp or {})}
+            return files, schema, op, n, n, extra
+
+        return self._occ_loop(attempt) or 0
 
     def append(self, df: DataFrame, evolve_schema: bool = False) -> int:
         """Transactional append: all-or-nothing visibility.
@@ -1402,69 +1484,16 @@ class TxnTable:
         through the widened schema as nulls — Parquet scans by name). A
         frame MISSING table columns requires ``evolve_schema=True``, which
         null-fills them (Delta's mergeSchema posture) — without the flag
-        it raises instead of silently forking the schema."""
-        self._require_unbucketed("append")
-
-        def attempt(base):
-            data = df
-            schema = df.schema
-            if base >= 1:
-                table_schema = StructType.fromJson(
-                    json.loads(self._manifest(base)["schema"])
-                )
-                missing = [
-                    f for f in table_schema.fields
-                    if f.name not in set(schema.fieldNames())
-                ]
-                if missing:
-                    if not evolve_schema:
-                        raise ValueError(
-                            f"{self.path}: append frame lacks table columns "
-                            f"{[f.name for f in missing]}; pass "
-                            "evolve_schema=True to null-fill them"
-                        )
-                    have = set(schema.fieldNames())
-                    # table columns first (nulls where df lacks them), then
-                    # df-only columns appended in df order — the evolved
-                    # committed schema
-                    cols = [
-                        F.col(f.name) if f.name in have
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                        for f in table_schema.fields
-                    ] + [
-                        F.col(f.name)
-                        for f in schema.fields
-                        if f.name not in set(table_schema.fieldNames())
-                    ]
-                    data = df.select(*cols)
-                    schema = data.schema
-            new_files, n = self._write_data(data)
-            m = self._manifest(base)
-            all_files = [os.path.join(self.path, f) for f in m["files"]] + new_files
-            return all_files, schema, "append", n, n, self._stats_extra(base, new_files)
-
-        return self._occ_loop(attempt)
+        it raises instead of silently forking the schema. Returns rows
+        appended; see ``_append``."""
+        return self._append("append", df, evolve_schema=evolve_schema)
 
     def idempotent_append(self, df: DataFrame, key_cols: list[str]) -> int:
         """Exactly-once insert-if-absent (Postgres ON CONFLICT DO NOTHING):
-        anti-join against the snapshot INSIDE the retry loop, so a concurrent
-        winner's rows are excluded on retry. Returns rows appended."""
-        self._require_unbucketed("idempotent_append")
-
-        def attempt(base):
-            existing = self.read(base).select(*key_cols)
-            fresh = df.join(existing, on=key_cols, how="left_anti")
-            new_files, n = self._write_data(fresh)
-            if n == 0:
-                return None
-            m = self._manifest(base)
-            all_files = [os.path.join(self.path, f) for f in m["files"]] + new_files
-            return (
-                all_files, df.schema, "idempotent_append", n, n,
-                self._stats_extra(base, new_files),
-            )
-
-        return self._occ_loop(attempt) or 0
+        only rows whose ``key_cols`` the snapshot does not hold are
+        appended, and a batch with none commits nothing. Returns rows
+        appended; see ``_append``."""
+        return self._append("idempotent_append", df, key_cols)
 
     def committed_epoch(self, app_id: str) -> int:
         """Highest epoch committed by ``app_id`` (-1 if none) — the replay
@@ -1481,53 +1510,15 @@ class TxnTable:
     ) -> int:
         """Exactly-once micro-batch append for foreachBatch sinks.
 
-        Each commit records (app_id, epoch): a replayed batch (failure
-        recovery re-delivers the same epoch_id) finds its epoch already in
-        the log and becomes a no-op — Delta's txnAppId/txnVersion idempotent-
-        write contract, here per-manifest. ``key_cols`` optionally layers the
-        anti-join on top for cross-writer key dedup. Returns rows appended
-        (0 for a recognized replay)."""
-        self._require_unbucketed("stream_epoch_append")
-
-        def attempt(base):
-            if self.committed_epoch(app_id) >= epoch_id:
-                return None  # replayed batch: already committed
-            data = df
-            if key_cols:
-                existing = self.read(base).select(*key_cols)
-                data = df.join(existing, on=key_cols, how="left_anti")
-            new_files, n = self._write_data(data)
-            m = self._manifest(base)
-            all_files = [os.path.join(self.path, f) for f in m["files"]] + new_files
-            return (
-                all_files,
-                df.schema,
-                "stream_epoch_append",
-                n,
-                n,
-                self._stats_extra(base, new_files),
-            )
-
-        def attempt_with_meta(base):
-            prepared = attempt(base)
-            if prepared is None:
-                return None
-            files, schema, op, n_rows, result, extra = prepared
-            if self._commit(
-                base, files, schema, op, n_rows,
-                extra={**extra, "app_id": app_id, "epoch": int(epoch_id)},
-            ):
-                return ("committed", result)
-            return ("retry", None)
-
-        for _ in range(self._MAX_RETRIES):
-            out = attempt_with_meta(self.version())
-            if out is None:
-                return 0
-            state, n = out
-            if state == "committed":
-                return n
-        raise TxnConflict(f"{self.path}: commit contention, gave up")
+        Each commit records (app_id, epoch), an empty batch's too: a
+        replayed batch (failure recovery re-delivers the same epoch_id)
+        finds its epoch already in the log and becomes a no-op — Delta's
+        txnAppId/txnVersion idempotent-write contract, here per-manifest.
+        ``key_cols`` optionally layers the anti-join on top for cross-writer
+        key dedup. Returns rows appended (0 for a recognized replay); see
+        ``_append``."""
+        stamp = {"app_id": app_id, "epoch": int(epoch_id)}
+        return self._append("stream_epoch_append", df, key_cols, stamp=stamp)
 
     def overwrite(self, df: DataFrame, meta: dict[str, Any] | None = None) -> int:
         """Atomic whole-table replace: readers see the old snapshot until the
@@ -1536,12 +1527,11 @@ class TxnTable:
         manifest (JSON-able, non-colliding keys) — e.g. the source-version
         watermark an incrementally-maintained view records per refresh."""
 
-        def attempt(base):
-            bucket = self.bucket_spec(base) if base else None
-            new_files, n = self._write_data(df, bucket=bucket)
+        def attempt(base, m):
+            new_files, n = self._write_data(df, bucket=m.get("bucket") if m else None)
             return (
                 new_files, df.schema, "overwrite", n, n,
-                {**self._snapshot_extra(base, new_files, bucket), **(meta or {})},
+                {**self._snapshot_extra(m, new_files), **(meta or {})},
             )
 
         return self._occ_loop(attempt)
@@ -1573,13 +1563,12 @@ class TxnTable:
         snapshot at commit time) unchanged under ``op``, carrying the
         ``_SNAPSHOT_KEYS`` plus ``extra``."""
 
-        def attempt(base):
+        def attempt(base, m):
             src = self._manifest(base if version is None else version)
             carried = {k: src[k] for k in _SNAPSHOT_KEYS if k in src}
             files = [os.path.join(self.path, f) for f in src["files"]]
-            schema = StructType.fromJson(json.loads(src["schema"]))
             return (
-                files, schema, op, src.get("n_rows"),
+                files, _schema_of(src), op, src.get("n_rows"),
                 base + 1, {**carried, **extra},
             )
 
@@ -1623,15 +1612,12 @@ class TxnTable:
             "_change_type"
         )
 
-        def attempt(base):
-            bucket = self.bucket_spec(base) if base else None
-            result = (
-                self.read(base).exceptAll(deletes).unionByName(inserts)
-            )
-            new_files, n = self._write_data(result, bucket=bucket)
+        def attempt(base, m):
+            result = self.read(base).exceptAll(deletes).unionByName(inserts)
+            new_files, n = self._write_data(result, bucket=m.get("bucket"))
             return (
                 new_files, result.schema, "apply_changes", n, n,
-                self._snapshot_extra(base, new_files, bucket),
+                self._snapshot_extra(m, new_files),
             )
 
         return self._occ_loop(attempt)
@@ -1685,9 +1671,9 @@ class TxnTable:
         anything commits, and surfaces as a ValueError naming the key."""
         upd = when_matched_update or {}
 
-        def attempt(base):
+        def attempt(base, m):
             target = self.read(base)
-            bucket = self.bucket_spec(base)
+            bucket = m.get("bucket")
             t = target.withColumn("__t", F.lit(1)).alias("t")
             s = _one_row_per_key(source, on, bucket).withColumn("__s", F.lit(1)).alias("s")
             joined = t.join(s, on=on, how="full_outer")
@@ -1774,37 +1760,28 @@ class TxnTable:
                 ) from None
             return (
                 new_files, result.schema, "merge", n, n,
-                self._snapshot_extra(base, new_files, bucket),
+                self._snapshot_extra(m, new_files),
             )
 
         return self._occ_loop(attempt)
 
-    def _touched_files(
-        self, base: int, cond: Column
-    ) -> tuple[list[str], StructType, int]:
-        """(relative paths of files holding rows where ``cond`` IS TRUE,
-        snapshot schema, matching-row count). ONE predicate-pushed scan with
-        ``input_file_name()``: parquet row-group statistics skip
-        non-matching groups, and only matching rows reach the aggregate —
-        the Delta-style touched-file discovery every file-level
-        copy-on-write op starts with."""
-        m = self._manifest(base)
-        schema = StructType.fromJson(json.loads(m["schema"]))
-        rel_files = m["files"]
-        if not rel_files:
-            return [], schema, 0
-        abs_files = [os.path.join(self.path, f) for f in rel_files]
+    def _touched_files(self, m: dict[str, Any], cond: Column) -> tuple[list[str], int]:
+        """(relative paths of manifest ``m``'s files holding rows where
+        ``cond`` IS TRUE, matching-row count). ONE predicate-pushed scan
+        grouped by file: parquet row-group statistics skip non-matching
+        groups, and only matching rows reach the aggregate — the
+        Delta-style touched-file discovery every file-level copy-on-write
+        op starts with."""
+        if not m["files"]:
+            return [], 0
         # Tag file identity BEFORE the DV overlay: a post-join
         # input_file_name() is ambiguous (two scan sources), and any DV
         # overlay must apply first so already-deleted rows cannot re-match.
         # Key on the FULL file path, not the basename — adopted external
         # layouts can hold colliding basenames and a basename map would
         # silently resolve a match to the wrong file.
-        tagged = self.spark.read.schema(schema).parquet(*abs_files).select(
-            "*", F.col("_metadata.file_path").alias("__tf")
-        )
         hits = (
-            self._dv_overlay(tagged, m, rel_files)
+            self._scan(m, m["files"], tags={"__tf": "file_path"})
             .filter(cond)
             .groupBy("__tf")
             .agg(F.count(F.lit(1)).alias("__n"))
@@ -1812,58 +1789,72 @@ class TxnTable:
         )
         root = os.path.abspath(self.path)
         touched = []
-        n_match = 0
         for r in hits:
             uri = r["__tf"]
             fp = uri[5:] if uri.startswith("file:") else uri
             fp = "/" + fp.lstrip("/")
             touched.append(os.path.relpath(os.path.abspath(fp), root))
-            n_match += r["__n"]
-        return sorted(touched), schema, int(n_match)
+        return sorted(touched), int(sum(r["__n"] for r in hits))
+
+    def _rewrite_touched(
+        self,
+        name: str,
+        op: str,
+        cond: Column,
+        rewrite: Callable[[DataFrame, Column], DataFrame],
+        insert: DataFrame | None = None,
+    ) -> int:
+        """File-level copy-on-write, the one body of ``delete_where``,
+        ``update_where`` and ``replace_where``: find the files holding a
+        row where ``cond`` IS TRUE (``_touched_files``), write
+        ``rewrite(their rows, hit)`` — ``hit`` is ``cond`` with NULL as
+        false — plus any ``insert`` rows, and commit the untouched files by
+        path with the new ones under ``op``. Stats and blooms carry for
+        untouched files and are computed for the new ones.
+
+        Cost: the discovery scan is predicate-pushed, and only the touched
+        files are rewritten: deleting one day from a year-partitioned fact
+        table rewrites ~1/365th of it, not the snapshot (contrast
+        ``merge``, which rewrites whole). Returns the rows matched (nothing
+        matched: no commit and 0), or with ``insert`` the rows written (it
+        always commits)."""
+
+        def attempt(base, m):
+            self._require_unbucketed(name, m)
+            touched, n_match = self._touched_files(m, cond)
+            if not touched and insert is None:
+                return None  # nothing matches: no-op, no commit
+            hit = F.coalesce(cond, F.lit(False))
+            data = rewrite(self._scan(m, touched), hit) if touched else insert
+            if touched and insert is not None:
+                data = data.unionByName(insert)
+            new_files, n_written = self._write_data(data)
+            gone = set(touched)
+            kept = [os.path.join(self.path, f) for f in m["files"] if f not in gone]
+            n_rows = m.get("n_rows")
+            if op == "delete":
+                n_rows = n_rows - n_match if n_rows else None
+            elif insert is not None:
+                n_rows = None  # the replaced region's new size is not counted
+            return (
+                kept + new_files, _schema_of(m), op, n_rows,
+                n_match if insert is None else n_written,
+                self._stats_extra(m, new_files),
+            )
+
+        return self._occ_loop(attempt) or 0
 
     def delete_where(self, cond: Column | str) -> int:
         """File-level copy-on-write DELETE: rows where ``cond`` IS TRUE are
         removed; rows where it is FALSE or NULL survive (SQL DELETE
         semantics). Only files that actually HOLD a matching row are
-        rewritten — every other file carries over untouched, so deleting
-        one day from a year-partitioned fact table rewrites ~1/365th of it,
-        not the snapshot (contrast ``merge``, which rewrites whole). The
-        discovery scan is predicate-pushed; file stats and blooms carry for
-        surviving files and are recomputed for rewrites. Returns rows
-        deleted (0 = no commit). Row-CHANGING op: CDC append feeds and
-        incremental MVs past it fall back, by design."""
-        cond_col = F.expr(cond) if isinstance(cond, str) else cond
-        self._require_unbucketed("delete_where")
-
-        def attempt(base):
-            touched, schema, n_match = self._touched_files(base, cond_col)
-            if not touched:
-                return None  # nothing matches: no-op, no commit
-            m = self._manifest(base)
-            keep = self._dv_overlay(
-                self.spark.read.schema(schema).parquet(
-                    *[os.path.join(self.path, f) for f in touched]
-                ),
-                m,
-                touched,
-            ).filter(~F.coalesce(cond_col, F.lit(False)))
-            new_files, _ = self._write_data(keep)
-            untouched = [f for f in m["files"] if f not in set(touched)]
-            all_files = [
-                os.path.join(self.path, f) for f in untouched
-            ] + new_files
-            n_total = (m.get("n_rows") or 0) - n_match if m.get("n_rows") else None
-            return (
-                all_files,
-                schema,
-                "delete",
-                n_total,
-                n_match,
-                self._stats_extra(base, new_files),
-            )
-
-        out = self._occ_loop(attempt)
-        return 0 if out is None else out
+        rewritten (``_rewrite_touched``). Returns rows deleted (0 = no
+        commit). Row-CHANGING op: CDC append feeds and incremental MVs past
+        it fall back, by design."""
+        return self._rewrite_touched(
+            "delete_where", "delete", _as_col(cond),
+            lambda rows, hit: rows.filter(~hit),
+        )
 
     def update_where(
         self, cond: Column | str, set_exprs: dict[str, Column | str]
@@ -1872,277 +1863,16 @@ class TxnTable:
         cond``): rows where ``cond`` IS TRUE get each target column
         replaced by its ``set_exprs`` expression (a Column or SQL string
         over the row); all other rows — including NULL-predicate rows —
-        carry unchanged. Likes its delete sibling, only files holding a
-        matching row are rewritten; untouched files carry over by path.
-        Types are pinned to the table schema (an expression cannot drift a
-        column's type). Returns rows updated (0 = no commit)."""
-        cond_col = F.expr(cond) if isinstance(cond, str) else cond
-        self._require_unbucketed("update_where")
-
-        def attempt(base):
-            touched, schema, n_match = self._touched_files(base, cond_col)
-            if not touched:
-                return None
-            names = set(schema.fieldNames())
-            unknown = [c for c in set_exprs if c not in names]
-            if unknown:
-                raise ValueError(
-                    f"update_where: SET targets {unknown} not in table "
-                    f"schema {sorted(names)}"
-                )
-            m = self._manifest(base)
-            scan = self._dv_overlay(
-                self.spark.read.schema(schema).parquet(
-                    *[os.path.join(self.path, f) for f in touched]
-                ),
-                m,
-                touched,
-            )
-            is_hit = F.coalesce(cond_col, F.lit(False))
-            cols = []
-            for f in schema.fields:
-                if f.name in set_exprs:
-                    e = set_exprs[f.name]
-                    e_col = F.expr(e) if isinstance(e, str) else e
-                    cols.append(
-                        F.when(is_hit, e_col.cast(f.dataType))
-                        .otherwise(F.col(f.name))
-                        .alias(f.name)
-                    )
-                else:
-                    cols.append(F.col(f.name))
-            rewritten = scan.select(*cols)
-            new_files, _ = self._write_data(rewritten)
-            untouched = [f for f in m["files"] if f not in set(touched)]
-            all_files = [
-                os.path.join(self.path, f) for f in untouched
-            ] + new_files
-            return (
-                all_files,
-                schema,
-                "update",
-                m.get("n_rows"),
-                n_match,
-                self._stats_extra(base, new_files),
-            )
-
-        out = self._occ_loop(attempt)
-        return 0 if out is None else out
-
-    def delete_where_dv(self, cond: Column | str) -> int:
-        """Merge-on-READ delete (Delta/Iceberg deletion-vector posture):
-        matching row POSITIONS are recorded in a deletion-vector parquet
-        under the transaction log and every read path overlays them with a
-        broadcast anti-join — NO data file is rewritten. The write cost is
-        one predicate-pushed scan plus a deleted-rows-sized write,
-        independent of file sizes; the read cost is a broadcast anti-join
-        only on files that carry a DV. Use for frequent small deletes (GDPR
-        erasure, late-event retraction) where ``delete_where``'s
-        copy-on-write rewrite amplification dominates; a later ``compact``
-        (or any whole-snapshot rewrite) materializes the deletions and
-        drops the vectors — compaction IS the DV garbage collection.
-        Returns rows deleted (0 = no commit). Row-changing op: CDC append
-        feeds and incremental MVs past it fall back, by design."""
-        cond_col = F.expr(cond) if isinstance(cond, str) else cond
-        self._require_unbucketed("delete_where_dv")
-
-        def attempt(base):
-            m = self._manifest(base)
-            rel_files = m["files"]
-            if not rel_files:
-                return None
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            clash = {"file_name", "row_index"} & set(schema.fieldNames())
-            if clash:
-                raise ValueError(
-                    f"delete_where_dv: column names {sorted(clash)} are "
-                    "reserved for the deletion-vector position keys; use "
-                    "delete_where (copy-on-write) on this table"
-                )
-            names_list = [os.path.basename(f) for f in rel_files]
-            if len(set(names_list)) != len(names_list):
-                # adopted tables can hold externally-written files with
-                # colliding basenames; the DV position key is (file_name,
-                # row_index), so a collision would delete rows from BOTH
-                raise ValueError(
-                    "delete_where_dv: snapshot holds duplicate file "
-                    "basenames (adopted external layout?); use "
-                    "delete_where (copy-on-write) on this table"
-                )
-            tagged = self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f) for f in rel_files]
-            ).select(
-                "*",
-                F.col("_metadata.file_name").alias("file_name"),
-                F.col("_metadata.row_index").alias("row_index"),
-            )
-            dvs_now = m.get("dvs") or {}
-            dv_files = sorted({d for fs in dvs_now.values() for d in fs})
-            if dv_files:
-                prior = (
-                    self.spark.read.parquet(
-                        *[os.path.join(self.path, f) for f in dv_files]
-                    )
-                    .select(
-                        F.col("file_name").alias("__pf"),
-                        F.col("row_index").alias("__pr"),
-                    )
-                    .distinct()
-                )
-                tagged = tagged.join(
-                    F.broadcast(prior),
-                    (tagged["file_name"] == prior["__pf"])
-                    & (tagged["row_index"] == prior["__pr"]),
-                    "left_anti",
-                )
-            matches = tagged.filter(cond_col).select("file_name", "row_index")
-            dv_dir_rel = os.path.join(_TXN_DIR, "dv", uuid.uuid4().hex)
-            dv_dir = os.path.join(self.path, dv_dir_rel)
-            # one DV file per delete: vectors are deleted-rows-sized, and a
-            # part file per scan partition would bloat the active-DV count
-            matches.coalesce(1).write.parquet(dv_dir)
-            new_dv_files = self._list_parquet(dv_dir)
-            back = self.spark.read.parquet(dv_dir)
-            touched_names = [r[0] for r in back.select("file_name").distinct().collect()]
-            n_deleted = back.count()
-            if n_deleted == 0:
-                shutil.rmtree(dv_dir, ignore_errors=True)
-                return None
-            rel_new_dvs = [os.path.relpath(f, self.path) for f in new_dv_files]
-            by_name = {os.path.basename(f): f for f in rel_files}
-            new_dvs = {k: list(v) for k, v in dvs_now.items()}
-            for name in touched_names:
-                data_rel = by_name[name]
-                new_dvs.setdefault(data_rel, []).extend(rel_new_dvs)
-            extra = self._stats_extra(base, [])
-            extra["dvs"] = new_dvs
-            prev_n = m.get("n_rows")
-            return (
-                [os.path.join(self.path, f) for f in rel_files],
-                schema,
-                "delete_dv",
-                (prev_n - n_deleted) if isinstance(prev_n, int) else None,
-                n_deleted,
-                extra,
-            )
-
-        out = self._occ_loop(attempt)
-        return 0 if out is None else out
-
-    def update_where_dv(
-        self, cond: Column | str, set_exprs: dict[str, Column | str]
-    ) -> int:
-        """Merge-on-READ update (Iceberg's MoR posture): ONE commit records
-        a deletion vector over the matching rows AND appends their updated
-        copies — no existing data file is rewritten. Write cost is
-        matched-rows-sized (the copy-on-write ``update_where`` pays
-        touched-FILE-sized rewrites); read cost is the same broadcast DV
-        anti-join every read already applies. Use for frequent small
-        updates on tables with large files; compaction materializes the
-        whole history away. Returns rows updated (0 = no commit)."""
-        cond_col = F.expr(cond) if isinstance(cond, str) else cond
-        self._require_unbucketed("update_where_dv")
-
-        def attempt(base):
-            m = self._manifest(base)
-            rel_files = m["files"]
-            if not rel_files:
-                return None
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            clash = {"file_name", "row_index"} & set(schema.fieldNames())
-            if clash:
-                raise ValueError(
-                    f"update_where_dv: column names {sorted(clash)} are "
-                    "reserved for the deletion-vector position keys; use "
-                    "update_where (copy-on-write) on this table"
-                )
-            names_list = [os.path.basename(f) for f in rel_files]
-            if len(set(names_list)) != len(names_list):
-                raise ValueError(
-                    "update_where_dv: snapshot holds duplicate file "
-                    "basenames (adopted external layout?); use "
-                    "update_where (copy-on-write) on this table"
-                )
-            names = set(schema.fieldNames())
-            unknown = [c for c in set_exprs if c not in names]
-            if unknown:
-                raise ValueError(
-                    f"update_where_dv: SET targets {unknown} not in table "
-                    f"schema {sorted(names)}"
-                )
-            tagged = self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f) for f in rel_files]
-            ).select(
-                "*",
-                F.col("_metadata.file_name").alias("file_name"),
-                F.col("_metadata.row_index").alias("row_index"),
-            )
-            dvs_now = m.get("dvs") or {}
-            dv_files = sorted({d for fs in dvs_now.values() for d in fs})
-            if dv_files:
-                prior = (
-                    self.spark.read.parquet(
-                        *[os.path.join(self.path, f) for f in dv_files]
-                    )
-                    .select(
-                        F.col("file_name").alias("__pf"),
-                        F.col("row_index").alias("__pr"),
-                    )
-                    .distinct()
-                )
-                tagged = tagged.join(
-                    F.broadcast(prior),
-                    (tagged["file_name"] == prior["__pf"])
-                    & (tagged["row_index"] == prior["__pr"]),
-                    "left_anti",
-                )
-            matched = tagged.filter(cond_col).localCheckpoint()
-            dv_dir_rel = os.path.join(_TXN_DIR, "dv", uuid.uuid4().hex)
-            dv_dir = os.path.join(self.path, dv_dir_rel)
-            matched.select("file_name", "row_index").coalesce(1).write.parquet(
-                dv_dir
-            )
-            back = self.spark.read.parquet(dv_dir)
-            touched_names = [
-                r[0] for r in back.select("file_name").distinct().collect()
-            ]
-            n_updated = back.count()
-            if n_updated == 0:
-                shutil.rmtree(dv_dir, ignore_errors=True)
-                return None
-            cols = []
-            for f in schema.fields:
-                if f.name in set_exprs:
-                    e = set_exprs[f.name]
-                    e_col = F.expr(e) if isinstance(e, str) else e
-                    cols.append(e_col.cast(f.dataType).alias(f.name))
-                else:
-                    cols.append(F.col(f.name))
-            new_files, _ = self._write_data(matched.select(*cols))
-            new_dv_rels = [
-                os.path.relpath(f, self.path)
-                for f in self._list_parquet(dv_dir)
-            ]
-            by_name = {os.path.basename(f): f for f in rel_files}
-            new_dvs = {k: list(v) for k, v in dvs_now.items()}
-            for name in touched_names:
-                new_dvs.setdefault(by_name[name], []).extend(new_dv_rels)
-            extra = self._stats_extra(base, new_files)
-            extra["dvs"] = new_dvs
-            all_files = [
-                os.path.join(self.path, f) for f in rel_files
-            ] + new_files
-            return (
-                all_files,
-                schema,
-                "update_dv",
-                m.get("n_rows"),
-                n_updated,
-                extra,
-            )
-
-        out = self._occ_loop(attempt)
-        return 0 if out is None else out
+        carry unchanged. Like its delete sibling, only files holding a
+        matching row are rewritten (``_rewrite_touched``). Types are pinned
+        to the table schema (an expression cannot drift a column's type).
+        Returns rows updated (0 = no commit)."""
+        return self._rewrite_touched(
+            "update_where", "update", _as_col(cond),
+            lambda rows, hit: rows.select(
+                *_set_columns("update_where", rows.schema, set_exprs, hit)
+            ),
+        )
 
     def replace_where(self, cond: Column | str, df: DataFrame) -> int:
         """Partition-scoped overwrite (Delta's ``replaceWhere``): atomically
@@ -2151,49 +1881,123 @@ class TxnTable:
         Every inserted row must satisfy ``cond`` (enforced; otherwise a
         re-run would not be idempotent — the second run's delete wouldn't
         claim the stray rows). File-level copy-on-write like
-        ``delete_where``: untouched files carry over; one commit covers
-        the delete AND the insert. Returns the rows written to the
-        replaced region (the inserts plus carried non-matching rows from
-        rewritten files)."""
-        cond_col = F.expr(cond) if isinstance(cond, str) else cond
-        self._require_unbucketed("replace_where")
+        ``delete_where`` (``_rewrite_touched``): one commit covers the
+        delete AND the insert. Returns the rows written to the replaced
+        region (the inserts plus carried non-matching rows from rewritten
+        files)."""
+        cond_col = _as_col(cond)
         stray = df.filter(~F.coalesce(cond_col, F.lit(False))).limit(1).collect()
         if stray:
             raise ValueError(
                 "replace_where: an insert row does not satisfy the "
                 f"predicate — first offender: {stray[0].asDict()}"
             )
+        return self._rewrite_touched(
+            "replace_where", "replace_where", cond_col,
+            lambda rows, hit: rows.filter(~hit), insert=df,
+        )
 
-        def attempt(base):
-            touched, schema, _n_match = self._touched_files(base, cond_col)
-            m = self._manifest(base)
-            survivors = None
-            if touched:
-                survivors = self._dv_overlay(
-                    self.spark.read.schema(schema).parquet(
-                        *[os.path.join(self.path, f) for f in touched]
-                    ),
-                    m,
-                    touched,
-                ).filter(~F.coalesce(cond_col, F.lit(False)))
-            data = (
-                df if survivors is None else survivors.unionByName(df)
+    def _write_dv(
+        self,
+        name: str,
+        op: str,
+        cond: Column,
+        set_exprs: dict[str, Column | str] | None = None,
+    ) -> int:
+        """Merge-on-read, the one body of ``delete_where_dv`` and
+        ``update_where_dv``: the positions (file basename, row index) of
+        the live rows where ``cond`` holds go into ONE deletion-vector
+        parquet under the transaction log, and with ``set_exprs`` their
+        updated copies are appended in the same commit. No existing data
+        file is rewritten.
+
+        Cost: one predicate-pushed position scan (earlier vectors overlaid
+        by ``_scan``), a deleted-rows-sized vector write and one grouped
+        read-back of it that yields both the touched files and the count;
+        an update adds its matched-rows-sized append. Independent of file
+        sizes, where ``delete_where``/``update_where`` pay touched-FILE
+        rewrites. Reads pay a broadcast anti-join only on files that carry
+        a vector, and any whole-snapshot rewrite (``compact``) materializes
+        the vectors away. Returns rows matched (0 = no commit)."""
+
+        def attempt(base, m):
+            self._require_unbucketed(name, m)
+            rel_files = m["files"]
+            if not rel_files:
+                return None
+            schema = _schema_of(m)
+            cow = f"use {name.removesuffix('_dv')} (copy-on-write) on this table"
+            clash = {"file_name", "row_index"} & set(schema.fieldNames())
+            if clash:
+                raise ValueError(
+                    f"{name}: column names {sorted(clash)} are reserved for "
+                    f"the deletion-vector position keys; {cow}"
+                )
+            by_name = {os.path.basename(f): f for f in rel_files}
+            if len(by_name) != len(rel_files):
+                # adopted tables can hold externally-written files with
+                # colliding basenames; the DV position key is (file_name,
+                # row_index), so a collision would delete rows from BOTH
+                raise ValueError(
+                    f"{name}: snapshot holds duplicate file basenames "
+                    f"(adopted external layout?); {cow}"
+                )
+            cols = None if set_exprs is None else _set_columns(name, schema, set_exprs)
+            positions = {"file_name": "file_name", "row_index": "row_index"}
+            matched = self._scan(m, rel_files, tags=positions).filter(cond)
+            if cols is not None:
+                # the vector and the updated copies must see the same rows
+                matched = matched.localCheckpoint()
+            dv_dir = os.path.join(self.path, _TXN_DIR, "dv", uuid.uuid4().hex)
+            # one DV file per commit: vectors are deleted-rows-sized, and a
+            # part file per scan partition would bloat the active-DV count
+            matched.select(*positions).coalesce(1).write.parquet(dv_dir)
+            per_file = (
+                self.spark.read.parquet(dv_dir).groupBy("file_name").count().collect()
             )
-            new_files, n_written = self._write_data(data)
-            untouched = [f for f in m["files"] if f not in set(touched)]
-            all_files = [
-                os.path.join(self.path, f) for f in untouched
-            ] + new_files
+            n = sum(r["count"] for r in per_file)
+            if n == 0:
+                shutil.rmtree(dv_dir, ignore_errors=True)
+                return None
+            new_dvs = [os.path.relpath(f, self.path) for f in self._list_parquet(dv_dir)]
+            dvs = {k: list(v) for k, v in (m.get("dvs") or {}).items()}
+            for r in per_file:
+                dvs.setdefault(by_name[r["file_name"]], []).extend(new_dvs)
+            new_files = [] if cols is None else self._write_data(matched.select(*cols))[0]
+            n_rows = m.get("n_rows")
+            if cols is None:
+                n_rows = n_rows - n if isinstance(n_rows, int) else None
             return (
-                all_files,
-                schema,
-                "replace_where",
-                None,
-                n_written,
-                self._stats_extra(base, new_files),
+                [os.path.join(self.path, f) for f in rel_files] + new_files,
+                schema, op, n_rows, n,
+                {**self._stats_extra(m, new_files), "dvs": dvs},
             )
 
-        return self._occ_loop(attempt)
+        return self._occ_loop(attempt) or 0
+
+    def delete_where_dv(self, cond: Column | str) -> int:
+        """Merge-on-READ delete (Delta/Iceberg deletion-vector posture):
+        matching row POSITIONS are recorded in a deletion vector and every
+        read path overlays them — NO data file is rewritten
+        (``_write_dv``). Use for frequent small deletes (GDPR erasure,
+        late-event retraction) where ``delete_where``'s copy-on-write
+        rewrite amplification dominates; a later ``compact`` (or any
+        whole-snapshot rewrite) materializes the deletions and drops the
+        vectors — compaction IS the DV garbage collection. Returns rows
+        deleted (0 = no commit). Row-changing op: CDC append feeds and
+        incremental MVs past it fall back, by design."""
+        return self._write_dv("delete_where_dv", "delete_dv", _as_col(cond))
+
+    def update_where_dv(
+        self, cond: Column | str, set_exprs: dict[str, Column | str]
+    ) -> int:
+        """Merge-on-READ update (Iceberg's MoR posture): ONE commit records
+        a deletion vector over the matching rows AND appends their updated
+        copies — no existing data file is rewritten (``_write_dv``). SET
+        semantics as ``update_where``. Use for frequent small updates on
+        tables with large files; compaction materializes the whole history
+        away. Returns rows updated (0 = no commit)."""
+        return self._write_dv("update_where_dv", "update_dv", _as_col(cond), set_exprs)
 
     def read_appends_since(self, version: int) -> DataFrame:
         """Rows added by append-family commits AFTER ``version`` (the
@@ -2202,18 +2006,12 @@ class TxnTable:
         manifest delta; an overwrite/merge/compact in the range raises, since
         its file delta does not represent row-level changes."""
         current = self.version()
-        if version >= current:
-            m = self._manifest(current)
-            return local_df(
-                self.spark, [], StructType.fromJson(json.loads(m["schema"]))
-            )
-        new_files = append_delta_files(self.path, version, current)
-        schema = StructType.fromJson(json.loads(self._manifest(current)["schema"]))
-        if not new_files:
-            return local_df(self.spark, [], schema)
-        return self.spark.read.schema(schema).parquet(
-            *[os.path.join(self.path, f) for f in new_files]
+        new_files = (
+            append_delta_files(self.path, version, current) if version < current else []
         )
+        # a vector on an appended file comes from a later commit, which is
+        # not an append: the range would have raised, so no overlay applies
+        return self._scan(self._manifest(current), new_files)
 
     def read_row_changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Row-level change feed between two snapshots, computed from the
@@ -2326,9 +2124,9 @@ class TxnTable:
         a target above the current count (splitting few files into more)
         pays a ``repartition`` shuffle, which is what spreads the rows."""
 
-        def attempt(base):
+        def attempt(base, m):
             snapshot = self.read(base)
-            bucket = self.bucket_spec(base)
+            bucket = m.get("bucket")
             if bucket:
                 # a bucketed snapshot is already one file per bucket —
                 # compaction is its write path by construction
@@ -2337,16 +2135,15 @@ class TxnTable:
                 n_parts = target_partitions or max(
                     1, self.spark.sparkContext.defaultParallelism
                 )
-                n_files = len(self._manifest(base)["files"])
                 compacted = (
                     snapshot.coalesce(n_parts)
-                    if n_parts <= n_files
+                    if n_parts <= len(m["files"])
                     else snapshot.repartition(n_parts)
                 )
             new_files, n = self._write_data(compacted, bucket=bucket)
             return (
                 new_files, snapshot.schema, "compact", n, len(new_files),
-                self._snapshot_extra(base, new_files, bucket),
+                self._snapshot_extra(m, new_files),
             )
 
         return self._occ_loop(attempt)
@@ -2410,11 +2207,11 @@ class TxnTable:
         Returns the new file count. Conflicts with bucketing (two layouts
         can't both own the write distribution) — bucketed tables raise.
         """
-        self._require_unbucketed("zorder_by")
         if not cols:
             raise ValueError("zorder_by needs at least one column")
 
-        def attempt(base):
+        def attempt(base, m):
+            self._require_unbucketed("zorder_by", m)
             snap = self.read(base)
             zval = _zorder_value(snap, cols)
             n_parts = target_partitions or max(
@@ -2427,10 +2224,9 @@ class TxnTable:
                 .drop("__z")
             )
             new_files, n = self._write_data(clustered)
-            m = self._manifest(base)
             stats_cols = sorted(set(m.get("stats_cols") or []) | set(cols))
             extra = {
-                **self._bloom_extra(base, new_files, keep_base=False),
+                **self._bloom_extra(m, new_files, keep_base=False),
                 "stats_cols": stats_cols,
                 "file_stats": self._collect_file_stats(new_files, stats_cols),
             }
@@ -2444,12 +2240,15 @@ class TxnTable:
         """Delete data files not referenced by ANY manifest (crash/race
         orphans). Returns the number of files removed. Referenced-by-old-
         snapshot files are kept — time travel stays valid."""
-        referenced = set()
+        referenced: set[str] = set()
+        referenced_dvs: set[str] = set()
         for v in range(1, self.version() + 1):
             # raw manifests suffice: a delta's "adds" plus every checkpoint's
             # "files" covers the union without re-resolving each version
             raw = _read_raw_manifest(self.path, v)
             referenced.update(raw["files"] if "files" in raw else raw["adds"])
+            for fs in (raw.get("dvs") or {}).values():
+                referenced_dvs.update(fs)
         removed = 0
         for f in self._list_parquet(self.path):
             rel = os.path.relpath(f, self.path)
@@ -2459,11 +2258,6 @@ class TxnTable:
         # deletion-vector parquets live under the txn log (outside the
         # data walk): keep every vector any raw manifest references (time
         # travel), remove crashed-attempt orphans
-        referenced_dvs: set[str] = set()
-        for v in range(1, self.version() + 1):
-            raw = _read_raw_manifest(self.path, v)
-            for fs in (raw.get("dvs") or {}).values():
-                referenced_dvs.update(fs)
         dv_root = os.path.join(self.path, _TXN_DIR, "dv")
         if os.path.isdir(dv_root):
             for root, _dirs, files_ in os.walk(dv_root):

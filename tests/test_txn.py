@@ -170,11 +170,37 @@ def test_idempotent_append_exactly_once_under_contention(spark, tdir):
 
 
 def test_idempotent_append_rerun_is_noop(spark, tdir):
+    """A re-run (every key present) and an empty batch append nothing and
+    commit nothing."""
     t = TxnTable.create(spark, tdir, _df(spark, [(1, "a")]))
     batch = _df(spark, [(1, "a"), (2, "b")])
     assert t.idempotent_append(batch, ["k"]) == 1
+    assert t.version() == 2
     assert t.idempotent_append(batch, ["k"]) == 0
+    assert t.idempotent_append(_df(spark, []), ["k"]) == 0
+    assert t.version() == 2
     assert t.read().count() == 2
+
+
+def test_append_family_aligns_the_frame_to_the_table_schema(spark, tdir):
+    """Every append-family op evolves the schema by a frame's extra
+    columns, and refuses a frame that lacks a table column (only
+    ``append(evolve_schema=True)`` null-fills one) instead of committing a
+    narrower schema that hides the column."""
+    t = TxnTable.create(spark, tdir, _df(spark, [(1, "a")]))
+    narrow = spark.createDataFrame([(2,)], "k bigint")
+    for op in (
+        lambda: t.append(narrow),
+        lambda: t.idempotent_append(narrow, ["k"]),
+        lambda: t.stream_epoch_append(narrow, "app", 0),
+    ):
+        with pytest.raises(ValueError, match="lacks table columns"):
+            op()
+    assert t.version() == 1
+    wide = spark.createDataFrame([(3, "c", 1.5)], "k bigint, v string, w double")
+    assert t.stream_epoch_append(wide, "app", 0, key_cols=["k"]) == 1
+    assert t.read().columns == ["k", "v", "w"]
+    assert _rows(t.read()) == [(1, "a", None), (3, "c", 1.5)]
 
 
 def test_merge_update_insert_delete(spark, tdir):
@@ -248,10 +274,17 @@ def test_stream_epoch_append_replay_is_noop(spark, tdir):
     assert t.stream_epoch_append(batch, app_id="q1", epoch_id=0) == 2
     # replay of epoch 0: recognized, skipped
     assert t.stream_epoch_append(batch, app_id="q1", epoch_id=0) == 0
+    assert t.version() == 2  # the replay committed nothing
     # a DIFFERENT app at the same epoch is independent
     assert t.stream_epoch_append(_df(spark, [(3, "c")]), app_id="q2", epoch_id=0) == 1
     assert t.read().count() == 4
     assert t.committed_epoch("q1") == 0 and t.committed_epoch("q2") == 0
+    # an empty batch still commits its epoch stamp, so its replay is a no-op
+    assert t.stream_epoch_append(_df(spark, []), app_id="q1", epoch_id=1) == 0
+    assert t.version() == 4 and t.committed_epoch("q1") == 1
+    assert t._manifest()["op"] == "stream_epoch_append"
+    assert t.stream_epoch_append(batch, app_id="q1", epoch_id=1) == 0
+    assert t.version() == 4 and t.read().count() == 4
 
 
 def test_txn_stream_sink_multi_epoch_exactly_once(spark, tmp_path):
@@ -1356,31 +1389,63 @@ def test_delete_where_dv_merge_on_read(spark, tdir):
     assert t.read().count() == 98
 
 
+def _pruned_reads(t):
+    """Every stats- or bloom-pruned reader, over keys around 50..59."""
+    return {
+        "read_pruned": t.read_pruned("k", 45, 65),
+        "read_pruned_in": t.read_pruned_in("k", [45, 55, 59, 60, 65]),
+        "read_pruned_all": t.read_pruned_all({"k": (45, 65), "x": (0.0, 62.0)}),
+        "read_point": t.read_point("k", 55),
+    }
+
+
 def test_delete_where_dv_point_and_pruned_reads_overlay(spark, tdir):
-    """The DV overlay applies to stats-pruned and bloom point reads too —
-    pruning never resurrects deleted rows."""
+    """The DV overlay applies to every stats-pruned and bloom point read
+    too — pruning never resurrects deleted rows."""
     t = TxnTable.create(
         spark, tdir,
         spark.range(0, 200).selectExpr("id AS k", "CAST(id AS DOUBLE) AS x").repartition(4),
-        stats_cols=["k"],
+        stats_cols=["k", "x"],
         bloom_cols=["k"],
         bloom_bits=1024,
     )
     t.delete_where_dv((F.col("k") >= 50) & (F.col("k") < 60))
-    assert sorted(r.k for r in t.read_pruned("k", 45, 65).collect()) == (
-        list(range(45, 50)) + list(range(60, 66))
-    )
-    assert t.read_point("k", 55).count() == 0
+    got = {name: sorted(r.k for r in df.collect()) for name, df in _pruned_reads(t).items()}
+    assert got == {
+        "read_pruned": list(range(45, 50)) + list(range(60, 66)),
+        "read_pruned_in": [45, 60, 65],
+        "read_pruned_all": list(range(45, 50)) + list(range(60, 63)),
+        "read_point": [],
+    }
     assert t.read_point("k", 65).count() == 1
-    # reserved-name guard
-    import pytest
 
-    bad = TxnTable.create(
-        spark, str(tdir) + "_b",
-        spark.createDataFrame([(1, "f")], "k bigint, file_name string"),
+
+def test_reads_without_deletion_vectors_add_no_overlay(spark, tdir):
+    """Over a snapshot with no deletion vector, read() and every pruned
+    read plan a bare scan: no join and no ``_metadata`` column."""
+    t = TxnTable.create(
+        spark, tdir,
+        spark.range(0, 200).selectExpr("id AS k", "CAST(id AS DOUBLE) AS x").repartition(4),
+        stats_cols=["k", "x"],
+        bloom_cols=["k"],
     )
-    with pytest.raises(ValueError, match="reserved"):
-        bad.delete_where_dv(F.col("k") == 1)
+    for name, df in {"read": t.read(), **_pruned_reads(t)}.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan and "_metadata" not in plan, (name, plan)
+
+
+@pytest.mark.parametrize("op", ["delete_where_dv", "update_where_dv"])
+def test_dv_ops_reject_reserved_column_names(spark, tdir, op):
+    """A column named like a deletion-vector position key makes both
+    merge-on-read ops refuse the table, before anything is written."""
+    bad = TxnTable.create(
+        spark, tdir, spark.createDataFrame([(1, "f")], "k bigint, file_name string")
+    )
+    args = (F.col("k") == 1,) + (({"file_name": F.lit("g")},) if op == "update_where_dv" else ())
+    with pytest.raises(ValueError, match=rf"{op}: column names \['file_name'\] are reserved"):
+        getattr(bad, op)(*args)
+    assert bad.version() == 1
+    assert not os.path.exists(os.path.join(tdir, "_txn", "dv"))
 
 
 def test_update_where_rewrites_only_touched_files(spark, tdir):
@@ -1500,12 +1565,12 @@ def test_dv_with_schema_evolution_and_occ(spark, tdir):
     assert final == {1, 4, 5}  # both the racing append and the delete landed
 
 
-def test_dv_rejects_duplicate_basenames(spark, tdir, tmp_path):
+@pytest.mark.parametrize("op", ["delete_where_dv", "update_where_dv"])
+def test_dv_rejects_duplicate_basenames(spark, tdir, tmp_path, op):
     """An adopted layout with colliding part-file basenames must refuse
-    merge-on-read ops: the DV position key is (file_name, row_index) and
-    a collision would delete rows from both files. Copy-on-write delete
-    still works."""
-    import pytest
+    both merge-on-read ops: the DV position key is (file_name, row_index)
+    and a collision would delete rows from both files. Copy-on-write
+    delete still works."""
 
     d = str(tmp_path / "ext")
     spark.createDataFrame([(1, "a")], "k bigint, v string").coalesce(1)\
@@ -1523,8 +1588,9 @@ def test_dv_rejects_duplicate_basenames(spark, tdir, tmp_path):
             _os.remove(extra)
     t = TxnTable.ensure(spark, d)
     assert t.read().count() == 2
-    with pytest.raises(ValueError, match="duplicate file basenames"):
-        t.delete_where_dv(F.col("k") == 1)
+    args = (F.col("k") == 1,) + (({"v": F.lit("x")},) if op == "update_where_dv" else ())
+    with pytest.raises(ValueError, match=f"{op}: snapshot holds duplicate file basenames"):
+        getattr(t, op)(*args)
     assert t.delete_where(F.col("k") == 1) == 1  # COW path unaffected
     assert _rows(t.read()) == [(2, "b")]
 
@@ -1723,3 +1789,104 @@ def test_row_count_reads_footers_and_counts_past_deletion_vectors(spark, tdir):
     assert out["n"] == 30 and t.row_count(1) == 20
     assert t.delete_where_dv(F.col("k") < 5) == 5
     assert t.row_count() == t.read().count() == 25
+
+
+def test_write_attempt_resolves_its_base_manifest_once(spark, tdir, monkeypatch):
+    """A write attempt resolves its base manifest once: the schema
+    alignment, the existing-key scan, the stats and bloom carry and the
+    commit's delta encoding all reuse it."""
+    from scraping_jobsdb_spark.sources import txn
+
+    t = TxnTable.create(
+        spark, tdir, _df(spark, [(0, "a")]),
+        stats_cols=["k"], bloom_cols=["k"], checkpoint_interval=5,
+    )
+    for i in (1, 2):
+        t.append(_df(spark, [(i, "b")]))
+    resolved = []
+    real = txn.read_manifest
+    monkeypatch.setattr(txn, "read_manifest", lambda p, v: resolved.append(v) or real(p, v))
+    assert t.idempotent_append(_df(spark, [(2, "b"), (3, "c")]), ["k"]) == 1
+    assert resolved == [3]
+    raw = txn._read_raw_manifest(t.path, 4)
+    assert raw["delta_base"] == 3 and raw["adds"]
+    assert sorted(raw["file_stats"]) == sorted(raw["file_blooms"]) == sorted(raw["adds"])
+
+
+# Spark jobs each write op may start on a fresh 200-row, 4-file table:
+# (no skipping index, stats_cols=["k"] + bloom_cols=["k"]). Each is the
+# op's measured count, so one extra job fails the test.
+_WRITE_OP_JOB_BUDGET = {
+    "append": (1, 4),
+    "idempotent_append": (2, 5),
+    "idempotent_append_noop": (2, 2),
+    "stream_epoch_append": (1, 4),
+    "stream_epoch_append_keys": (2, 5),
+    "stream_epoch_append_replay": (0, 0),
+    "delete_where": (3, 6),
+    "update_where": (3, 6),
+    "replace_where": (5, 8),
+    "delete_where_dv": (4, 4),
+    "update_where_dv": (6, 9),
+    "merge": (3, 6),
+    "compact": (1, 4),
+}
+
+
+def test_write_op_job_budget(spark, tmp_path):
+    """Every write op starts no more Spark jobs than its budget, with and
+    without a stats + bloom skipping index, and still returns what it
+    should. A no-op or replay is measured on its second call."""
+    from tests.conftest import count_spark_jobs
+
+    batch = _df(spark, [(i, f"n{i}") for i in range(195, 205)])
+    low = F.col("k") < 10
+
+    def insert_new(t):
+        return t.idempotent_append(batch, ["k"])
+
+    def epoch_0(t):
+        return t.stream_epoch_append(batch, "app", 0)
+
+    # name: (setup run first, measured op, expected return value)
+    ops = {
+        "append": (None, lambda t: t.append(batch), 10),
+        "idempotent_append": (None, insert_new, 5),
+        "idempotent_append_noop": (insert_new, insert_new, 0),
+        "stream_epoch_append": (None, epoch_0, 10),
+        "stream_epoch_append_keys": (
+            None, lambda t: t.stream_epoch_append(batch, "app", 0, key_cols=["k"]), 5,
+        ),
+        "stream_epoch_append_replay": (epoch_0, epoch_0, 0),
+        "delete_where": (None, lambda t: t.delete_where(low), 10),
+        "update_where": (None, lambda t: t.update_where(low, {"v": F.lit("u")}), 10),
+        "replace_where": (
+            None, lambda t: t.replace_where(low, _df(spark, [(i, "r") for i in range(5)])), 195,
+        ),
+        "delete_where_dv": (None, lambda t: t.delete_where_dv(low), 10),
+        "update_where_dv": (None, lambda t: t.update_where_dv(low, {"v": F.lit("u")}), 10),
+        "merge": (
+            None,
+            lambda t: t.merge(
+                _df(spark, [(5, "m"), (500, "m")], "k bigint, nv string"),
+                on=["k"], when_matched_update={"v": "nv"},
+            ),
+            201,
+        ),
+        "compact": (None, lambda t: t.compact(2), 2),
+    }
+    seen, over = {}, {}
+    for i, index in enumerate(({}, {"stats_cols": ["k"], "bloom_cols": ["k"]})):
+        for name, (setup, op, want) in ops.items():
+            rows = spark.range(0, 200).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+            t = TxnTable.create(
+                spark, str(tmp_path / f"{name}_{i}"), rows.repartition(4), **index
+            )
+            if setup is not None:
+                setup(t)
+            out = {}
+            jobs = count_spark_jobs(spark, lambda: out.setdefault("r", op(t)))
+            seen[name, i] = jobs
+            if jobs > _WRITE_OP_JOB_BUDGET[name][i] or out["r"] != want:
+                over[name, i] = (jobs, _WRITE_OP_JOB_BUDGET[name][i], out["r"], want)
+    assert not over, (over, seen)
